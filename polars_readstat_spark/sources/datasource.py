@@ -413,8 +413,8 @@ class ReadstatDataSource(DataSource):
         — one part-file per partition, staged + committed atomically
         (writers/spark_sink.py). sas7bdat (optionally RLE), sav, zsav,
         xpt, and dta (schema-deterministic sentinel-safe types so
-        parts always union; write_dta_partitioned keeps the
-        stats-narrowed storage)."""
+        parts always union; write_readstat_partitioned keeps the
+        stats-narrowed storage from its global pre-pass)."""
         from polars_readstat_spark.writers.spark_sink import (
             ReadstatDataSourceWriter,
         )

@@ -24,6 +24,40 @@ def ts_epoch_seconds(c: Column) -> Column:
     )
 
 
+# Spark types stored as plain doubles; void (an all-null column, e.g.
+# F.lit(None)) writes an all-missing numeric column
+_NUM_TYPES = (
+    "tinyint", "smallint", "int", "bigint", "float", "double", "boolean",
+    "void",
+)
+
+
+def column_kinds(fields) -> list[str]:
+    """Storage kind per Spark field — str | date | datetime | time |
+    num — shared by the sav/zsav, xpt, sas7bdat and por writers and
+    the distributed sink (dta plans Stata storage types itself).
+    Decimals are num; a bigint tagged ``time=ns_since_midnight`` is
+    time. Any other type raises one ValueError naming the column."""
+    kinds = []
+    for f in fields:
+        t = f.dataType.simpleString()
+        if t == "string":
+            kinds.append("str")
+        elif t == "date":
+            kinds.append("date")
+        elif t.startswith("timestamp"):
+            kinds.append("datetime")
+        elif t == "bigint" and f.metadata.get("time") == "ns_since_midnight":
+            kinds.append("time")
+        elif t in _NUM_TYPES or t.startswith("decimal"):
+            kinds.append("num")
+        else:
+            raise ValueError(
+                f"write readstat: unsupported type {t} for column {f.name!r}"
+            )
+    return kinds
+
+
 def str_cell_matrix(col, w: int, utf8_boundary: bool = False):
     """(n, w) uint8 matrix of UTF-8-encoded, truncated, space-padded
     fixed-width string cells — the shared string-cell pack for the
@@ -290,9 +324,3 @@ def iter_ordered_packed(df, pack_fn, max_rows: int = 8192, modules=(), cast=None
             )
     finally:
         staged.unpersist()
-
-
-def iter_packed_chunks_wide(df, pack_fn, max_rows: int = 8192, modules=()):
-    """Back-compat name for the wide (all-cores) packing protocol —
-    now the JVM-tagged single-crossing iter_ordered_packed."""
-    yield from iter_ordered_packed(df, pack_fn, max_rows, modules)

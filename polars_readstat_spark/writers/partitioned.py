@@ -4,12 +4,14 @@ partition, written inside the executor tasks.
 The single-file writers stream through the driver
 (`toLocalIterator`), which bounds memory but serializes wall-clock —
 SCALE.md names that bound. This path removes it: a global pre-pass
-job resolves one column plan (string widths, bigint downcasts) so
-every part-file shares a single schema, then `mapInPandas` tasks pack
-and assemble their own partition's file in parallel. The output
-directory is exactly the multi-file layout the readers already
-consume (`spark.read.format("readstat").load(dir)` unions part files
-with per-file partition fan-out), so dir-write → dir-read roundtrips.
+job resolves one column plan (string widths; for dta, integer
+narrowing from global min/max) so every part-file shares a single
+schema, then `mapInArrow` tasks write their own partition's file in
+parallel through the sink's part writer (``spark_sink.write_part``).
+The output directory is exactly the multi-file layout the readers
+already consume (`spark.read.format("readstat").load(dir)` unions part
+files with per-file partition fan-out), so dir-write → dir-read
+roundtrips.
 
 On a real cluster the directory must be storage every executor can
 reach (NFS/fuse-mounted object store); tasks write to a temp name and
@@ -21,474 +23,31 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-
-def _zone_kinds(df: DataFrame, fmt: str):
-    """(name, kind) pairs for the zone-map accumulator, derived from
-    the Spark schema with the sink's own mapping — best-effort: a
-    schema plan_write can't express just skips the stats."""
-    try:
-        from polars_readstat_spark.writers.spark_sink import plan_write
-
-        _, _, names, _, kinds = plan_write(df.schema, {"format": fmt})
-        return list(zip(names, kinds))
-    except Exception:  # noqa: BLE001 — stats are an optimization
-        return None
-
-
-def _zone_acc(zone_kinds, fmt="", bloom_cols=(), bloom_max_bytes=None):
-    """Per-task ZoneMapStats (None when the schema has no stats plan).
-    Tasks see the cast frames for sav/xpt/sas7bdat — harmless: date
-    kinds are excluded from stats entirely, plain numerics cast to
-    identical logical doubles, strings pass through unchanged. fmt
-    enables format-specific numeric poisoning (xpt IBM-float range).
-    Stripe accumulation is on (sink default) so the bulk exporters
-    publish the same intra-file pruning geometry as the sink."""
-    if not zone_kinds:
-        return None
-    from polars_readstat_spark.writers.spark_sink import (
-        ZoneMapStats,
-        _stripe_rows_opt,
-    )
-
-    return ZoneMapStats(
-        [n for n, _ in zone_kinds],
-        [k for _, k in zone_kinds],
-        fmt,
-        stripe_rows=_stripe_rows_opt({}),
-        bloom_cols=bloom_cols,
-        bloom_max_bytes=bloom_max_bytes,
-    )
-
-
-def _stats_json(acc) -> str:
-    """Task-result stats payload: {"cols": ..., "stripes": ...} (the
-    pre-r13 flat-dict form is still accepted by _publish)."""
-    import json
-
-    if acc is None:
-        return ""
-    return json.dumps(
-        {
-            "cols": acc.stats,
-            "stripes": acc.stripes_payload(),
-            "blooms": acc.bloom_payload(),
-        }
-    )
-
-
-def _publish(dir_path: str, results) -> None:
-    """Driver-side manifest publish from the collected task rows
-    (path, n_rows, stats-json). merge=True keeps valid entries from a
-    previous export into the same directory — stale ones are defused
-    by the reader's size+mtime validation anyway."""
-    import json
-
-    from polars_readstat_spark.writers.spark_sink import (
-        publish_stats_manifest,
-    )
-
-    parts = []
-    for r in results:
-        if not getattr(r, "stats", ""):
-            continue
-        try:
-            doc = json.loads(r.stats)
-        except ValueError:
-            continue
-        if (
-            isinstance(doc, dict)
-            and set(doc) <= {"cols", "stripes", "blooms"}
-            and isinstance(doc.get("cols"), dict)
-        ):
-            parts.append(
-                (
-                    r.path,
-                    r.n_rows,
-                    doc["cols"],
-                    doc.get("stripes"),
-                    doc.get("blooms"),
-                )
-            )
-        else:  # pre-r13 flat stats dict
-            parts.append((r.path, r.n_rows, doc))
-    if parts:
-        publish_stats_manifest(dir_path, parts, merge=True)
-
-
-def write_dta_partitioned(
-    df: DataFrame,
-    dir_path: str,
-    *,
-    data_label: str = "",
-    variable_labels: dict | None = None,
-    value_labels: dict | None = None,
-    bloom_columns: tuple = (),
-    bloom_max_bytes: int | None = None,
-) -> list[dict]:
-    """Write one .dta per partition into ``dir_path``.
-
-    Returns [{"path", "n_rows"}, ...] per written part (empty
-    partitions are skipped). All parts share the column plan from one
-    global pre-pass, so a directory scan unions them cleanly."""
-    from polars_readstat_spark.writers.dta import (
-        _assemble_dta,
-        _finalize_cols,
-        _pack_stream,
-        _plan_columns,
-    )
-
-    variable_labels = variable_labels or {}
-    value_labels = value_labels or {}
-    plan, aggs = _plan_columns(df)
-    stats = df.agg(*aggs).collect()[0].asDict()
-    cols = _finalize_cols(plan, stats)
-    names = [c[0] for c in cols]
-    from polars_readstat_spark.sources.fs import fs_makedirs
-
-    fs_makedirs(dir_path)
-
-    def write_partition(batches):
-        import pandas as pd
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        acc = _zone_acc(
-            zone_kinds, "dta", bloom_columns, bloom_max_bytes
-        )
-
-        def tap(it):
-            for pdf in it:
-                if acc is not None:
-                    acc.add_pandas(pdf)
-                yield pdf
-
-        data, strls, n_rows = _pack_stream(cols, tap(batches))
-        if n_rows > 0:
-            out = _assemble_dta(
-                cols, data, strls, n_rows, data_label, variable_labels,
-                value_labels,
-            )
-            from polars_readstat_spark.sources.fs import fs_join, fs_move, fs_open_output
-
-            path = fs_join(dir_path, f"part-{pid:05d}.dta")
-            tmp = path + f".tmp{os.getpid()}"
-            with fs_open_output(tmp) as f:
-                f.write(out)
-            fs_move(tmp, path)
-            yield pd.DataFrame(
-                {
-                    "path": [path],
-                    "n_rows": [n_rows],
-                    "stats": [_stats_json(acc)],
-                }
-            )
-
-    zone_kinds = _zone_kinds(df, "dta")
-    results = (
-        df.select(*names)
-        .mapInPandas(
-            write_partition, schema="path string, n_rows long, stats string"
-        )
-        .collect()
-    )
-    _publish(dir_path, results)
-    return [{"path": r.path, "n_rows": r.n_rows} for r in results]
-
-
-def write_sav_partitioned(
-    df: DataFrame,
-    dir_path: str,
-    *,
-    data_label: str = "",
-    variable_labels: dict | None = None,
-    value_labels: dict | None = None,
-    measures: dict | None = None,
-    zsav: bool = False,
-    bloom_columns: tuple = (),
-    bloom_max_bytes: int | None = None,
-) -> list[dict]:
-    """Write one .sav per partition into ``dir_path`` (uncompressed
-    system files — each re-partitionable by our own reader). Same
-    shape as the dta path: one global pre-pass fixes string widths so
-    all parts share a dictionary layout. ``zsav=True`` wraps each
-    part's case data in the ZLIB block container (one .zsav per
-    partition; blocks stay independently decompressible for the
-    reader's block-range partitioning)."""
-    from polars_readstat_spark.writers.sav import (
-        _pack_columns,
-        _sav_cast,
-        _sav_columns,
-        _sav_dictionary,
-        _sav_widths,
-    )
-
-    variable_labels = variable_labels or {}
-    value_labels = value_labels or {}
-    measures = measures or {}
-    fields, names, shorts, kinds, aggs = _sav_columns(df)
-    stats = df.agg(*aggs).collect()[0].asDict()
-    widths = _sav_widths(fields, kinds, stats)
-    el_per = [max((w + 7) // 8, 1) if w else 1 for w in widths]
-    case_size = sum(el_per)
-    from polars_readstat_spark.sources.fs import fs_makedirs
-
-    fs_makedirs(dir_path)
-    src = _sav_cast(df, fields, kinds)
-
-    def write_partition(batches):
-        import pandas as pd
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        acc = _zone_acc(
-            zone_kinds, "sav", bloom_columns, bloom_max_bytes
-        )
-        data = bytearray()
-        n_rows = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if acc is not None:
-                acc.add_pandas(pdf)
-            data += _pack_columns(
-                [pdf[nm] for nm in names], kinds, widths, el_per, case_size
-            )
-            n_rows += len(pdf)
-        if n_rows > 0:
-            head = _sav_dictionary(
-                fields, names, shorts, kinds, widths, el_per, case_size,
-                n_rows, zsav, data_label, variable_labels, value_labels,
-                measures,
-            )
-            ext = "zsav" if zsav else "sav"
-            from polars_readstat_spark.sources.fs import fs_join, fs_move, fs_open_output
-
-            path = fs_join(dir_path, f"part-{pid:05d}.{ext}")
-            tmp = path + f".tmp{os.getpid()}"
-            with fs_open_output(tmp) as f:
-                f.write(bytes(head))
-                if zsav:
-                    from polars_readstat_spark.writers.sav import _ZlibSink
-
-                    zs = _ZlibSink(f, len(head))
-                    zs.write(bytes(data))
-                    zs.close()
-                else:
-                    f.write(bytes(data))
-            fs_move(tmp, path)
-            yield pd.DataFrame(
-                {
-                    "path": [path],
-                    "n_rows": [n_rows],
-                    "stats": [_stats_json(acc)],
-                }
-            )
-
-    zone_kinds = list(zip(names, kinds))
-    results = (
-        src.mapInPandas(
-            write_partition, schema="path string, n_rows long, stats string"
-        )
-        .collect()
-    )
-    _publish(dir_path, results)
-    return [{"path": r.path, "n_rows": r.n_rows} for r in results]
-
-
-def write_xpt_partitioned(
-    df: DataFrame,
-    dir_path: str,
-    *,
-    dataset_name: str = "DATA",
-    variable_labels: dict | None = None,
-    version: int = 5,
-    bloom_columns: tuple = (),
-    bloom_max_bytes: int | None = None,
-) -> list[dict]:
-    """Write one .xpt per partition into ``dir_path``. XPT carries no
-    row count in its header, so each task writes header + its packed
-    records + the 80-byte tail pad directly; string widths come from
-    the one global pre-pass."""
-    from polars_readstat_spark.writers.xpt import (
-        _pack_xpt,
-        _xpt_cast,
-        _xpt_columns,
-        _xpt_header,
-        _xpt_widths,
-    )
-
-    variable_labels = variable_labels or {}
-    fields, names, shorts, kinds, aggs = _xpt_columns(df)
-    stats = df.agg(*aggs).collect()[0].asDict()
-    widths = _xpt_widths(fields, kinds, stats)
-    record_width = sum(widths)
-    head = bytes(
-        _xpt_header(
-            fields, shorts, kinds, widths, dataset_name, variable_labels,
-            version,
-        )
-    )
-    from polars_readstat_spark.sources.fs import fs_makedirs
-
-    fs_makedirs(dir_path)
-    src = _xpt_cast(df, fields, kinds)
-
-    def write_partition(batches):
-        import pandas as pd
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        acc = _zone_acc(
-            zone_kinds, "xpt", bloom_columns, bloom_max_bytes
-        )
-        data = bytearray()
-        n_rows = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if acc is not None:
-                acc.add_pandas(pdf)
-            data += _pack_xpt(
-                [pdf[nm] for nm in names], kinds, widths, record_width
-            )
-            n_rows += len(pdf)
-        if n_rows > 0:
-            from polars_readstat_spark.sources.fs import fs_join, fs_move, fs_open_output
-
-            path = fs_join(dir_path, f"part-{pid:05d}.xpt")
-            tmp = path + f".tmp{os.getpid()}"
-            with fs_open_output(tmp) as f:
-                f.write(head)
-                f.write(bytes(data))
-                f.write(b" " * ((-len(data)) % 80))
-            fs_move(tmp, path)
-            if acc is not None:
-                from polars_readstat_spark.writers.spark_sink import (
-                    stats_reader_keys,
-                )
-
-                acc.stats = stats_reader_keys(
-                    acc.stats, "xpt", names, shorts
-                )
-                acc.bloom = stats_reader_keys(
-                    acc.bloom, "xpt", names, shorts
-                )
-                # stripe children carry the long names too — re-key
-                # them the same way or the reader's refutation
-                # lookups never match (the r12 XPT lesson, at stripe
-                # granularity)
-                for s in acc.stripes:
-                    s.stats = stats_reader_keys(
-                        s.stats, "xpt", names, shorts
-                    )
-            yield pd.DataFrame(
-                {
-                    "path": [path],
-                    "n_rows": [n_rows],
-                    "stats": [_stats_json(acc)],
-                }
-            )
-
-    zone_kinds = list(zip(names, kinds))
-    results = (
-        src.mapInPandas(
-            write_partition, schema="path string, n_rows long, stats string"
-        )
-        .collect()
-    )
-    _publish(dir_path, results)
-    return [{"path": r.path, "n_rows": r.n_rows} for r in results]
-
-
-def write_sas7bdat_partitioned(
-    df: DataFrame,
-    dir_path: str,
-    *,
-    dataset_name: str = "DATA",
-    variable_labels: dict | None = None,
-    page_length: int | None = None,
-    compress: str | None = None,
-    bloom_columns: tuple = (),
-    bloom_max_bytes: int | None = None,
-) -> list[dict]:
-    """Write one .sas7bdat per partition into ``dir_path``. Each task
-    assembles a complete file (header + meta page + data pages) and
-    back-patches its own row/page counts locally, so no global count
-    job is needed — only the string-width pre-pass is shared.
-    ``compress='rle'`` emits SASYZCRL row-compressed META pages."""
-    from polars_readstat_spark.writers.sas7bdat import (
-        _sas_cast,
-        _sas_columns,
-        _sas_widths,
-        _SasFileSink,
-    )
-
-    variable_labels = variable_labels or {}
-    fields, names, kinds, aggs = _sas_columns(df)
-    stats = df.agg(*aggs).collect()[0].asDict() if aggs else {}
-    widths = _sas_widths(fields, kinds, stats)
-    src = _sas_cast(df, fields, kinds)
-    from polars_readstat_spark.sources.fs import fs_makedirs
-
-    fs_makedirs(dir_path)
-
-    def write_partition(batches):
-        import pandas as pd
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        from polars_readstat_spark.sources.fs import fs_join, fs_move, fs_open_output
-
-        path = fs_join(dir_path, f"part-{pid:05d}.sas7bdat")
-        tmp = path + f".tmp{os.getpid()}"
-        acc = _zone_acc(
-            zone_kinds, "sas7bdat", bloom_columns, bloom_max_bytes
-        )
-        fh = sink = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if acc is not None:
-                acc.add_pandas(pdf)
-            if fh is None:
-                fh = fs_open_output(tmp)
-                sink = _SasFileSink(
-                    fh, fields, names, kinds, widths, dataset_name,
-                    variable_labels, page_length, compress,
-                )
-            sink.write_batch([pdf[nm] for nm in names])
-        if fh is not None:
-            n_rows = sink.n_rows
-            sink.close()
-            fh.close()
-            fs_move(tmp, path)
-            yield pd.DataFrame(
-                {
-                    "path": [path],
-                    "n_rows": [n_rows],
-                    "stats": [_stats_json(acc)],
-                }
-            )
-
-    zone_kinds = list(zip(names, kinds))
-    results = (
-        src.mapInPandas(
-            write_partition, schema="path string, n_rows long, stats string"
-        )
-        .collect()
-    )
-    _publish(dir_path, results)
-    return [{"path": r.path, "n_rows": r.n_rows} for r in results]
+# keyword arguments per format, named as in the single-file writers
+# (every format also takes bloom_columns and bloom_max_bytes)
+_KWARGS = {
+    "dta": {"data_label", "variable_labels", "value_labels"},
+    "sav": {"data_label", "variable_labels", "value_labels", "measures"},
+    "zsav": {"data_label", "variable_labels", "value_labels", "measures"},
+    "xpt": {"dataset_name", "variable_labels", "version"},
+    "sas7bdat": {"dataset_name", "variable_labels", "page_length", "compress"},
+}
+# passed to write_part as label arguments; the rest (data_label,
+# dataset_name, page_length, compress) ride in its options dict
+_LABELS = ("variable_labels", "value_labels", "measures", "version")
 
 
 def write_readstat_partitioned(df: DataFrame, dir_path: str, ext: str = "dta", **kwargs):
-    """Format-dispatching facade. dta, sav, xpt, and sas7bdat ship
-    distributed; POR stays driver-streamed (legacy eager format).
+    """Write one ``part-NNNNN.<ext>`` per non-empty partition into
+    ``dir_path`` plus its ``_prs_stats.json`` zone-map manifest.
+    Returns [{"path", "n_rows"}, ...] per written part.
+
+    dta, sav, zsav, xpt and sas7bdat ship distributed; POR stays
+    driver-streamed (legacy eager format). Keyword arguments are the
+    format's labels (see _KWARGS) plus ``bloom_columns`` and
+    ``bloom_max_bytes`` (the sink's ``zonemap_bloom_*`` options).
     ``partition_by=[...]`` routes to the hive-style layout writer
     (key=value/ subdirectories, one manifest each — writers/hive.py)."""
     fmt = ext.lstrip(".").lower()
@@ -496,17 +55,72 @@ def write_readstat_partitioned(df: DataFrame, dir_path: str, ext: str = "dta", *
         from polars_readstat_spark.writers.hive import write_readstat_hive
 
         return write_readstat_hive(df, dir_path, ext=fmt, **kwargs)
-    if fmt == "dta":
-        return write_dta_partitioned(df, dir_path, **kwargs)
-    if fmt == "sav":
-        return write_sav_partitioned(df, dir_path, **kwargs)
-    if fmt == "zsav":
-        return write_sav_partitioned(df, dir_path, zsav=True, **kwargs)
-    if fmt == "xpt":
-        return write_xpt_partitioned(df, dir_path, **kwargs)
-    if fmt == "sas7bdat":
-        return write_sas7bdat_partitioned(df, dir_path, **kwargs)
-    raise NotImplementedError(
-        f"write_readstat_partitioned: format {ext!r} not yet distributed; "
-        "use write_readstat per file or repartition+loop driver-side"
+    if fmt not in _KWARGS:
+        raise NotImplementedError(
+            f"write_readstat_partitioned: format {ext!r} not yet distributed; "
+            "use write_readstat per file or repartition+loop driver-side"
+        )
+    unknown = set(kwargs) - _KWARGS[fmt] - {"bloom_columns", "bloom_max_bytes"}
+    if unknown:
+        raise TypeError(
+            f"write_readstat_partitioned: unexpected keyword arguments "
+            f"{sorted(unknown)} for format {fmt!r}"
+        )
+    from polars_readstat_spark.sources.fs import fs_join, fs_makedirs
+    from polars_readstat_spark.writers.spark_sink import (
+        PART_ROWS_SCHEMA,
+        format_widths,
+        part_rows_batch,
+        plan_write,
+        publish_part_rows,
+        write_part,
     )
+
+    labels = {k: kwargs.pop(k) for k in _LABELS if k in kwargs}
+    options = {
+        "format": fmt,
+        "zonemap_bloom_columns": kwargs.pop("bloom_columns", ()),
+        "zonemap_bloom_max_bytes": kwargs.pop("bloom_max_bytes", None),
+        **kwargs,
+    }
+    fmt, fields, names, shorts, kinds = plan_write(df.schema, options)
+    # the global pre-pass: one aggregation job fixes the plan every
+    # part shares
+    if fmt == "dta":
+        from polars_readstat_spark.writers.dta import (
+            _finalize_cols,
+            _plan_columns,
+        )
+
+        dta_plan, aggs = _plan_columns(df)
+        plan = _finalize_cols(dta_plan, df.agg(*aggs).collect()[0].asDict())
+    else:
+        aggs = [
+            F.max(F.octet_length(n)).alias(n)
+            for n, k in zip(names, kinds)
+            if k == "str"
+        ]
+        stats = df.agg(*aggs).collect()[0].asDict() if aggs else {}
+        plan = format_widths(
+            fmt, fields, kinds,
+            {n: max(int(w or 0), 1) for n, w in stats.items()},
+        )
+    fs_makedirs(dir_path)
+
+    def task(batches):
+        from pyspark import TaskContext
+
+        from polars_readstat_spark.sources.fs import fs_move
+
+        pid = TaskContext.get().partitionId()
+        path = fs_join(dir_path, f"part-{pid:05d}.{fmt}")
+        tmp = path + f".tmp{os.getpid()}"
+        n, *stats = write_part(
+            batches, tmp, fmt, fields, names, shorts, kinds, options,
+            plan, **labels,
+        )
+        if n:
+            fs_move(tmp, path)
+            yield part_rows_batch([(path, n, *stats)])
+
+    return publish_part_rows(df.mapInArrow(task, PART_ROWS_SCHEMA).collect())

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from polars_readstat_spark.sources.por.b30 import _parse_base30
-from polars_readstat_spark.writers import ts_epoch_seconds
+from polars_readstat_spark.writers import column_kinds, ts_epoch_seconds
 
 
 from polars_readstat_spark.sources.por.reader import (
@@ -742,21 +742,12 @@ def write_por(
     names = [f.name for f in fields]
     por_names = _por_names(names)
 
-    kinds = []
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for f in fields:
-        t = f.dataType.simpleString()
-        if t == "string":
-            kinds.append("str")
-            aggs.append(F.max(F.octet_length(f.name)).alias(f"__w_{f.name}"))
-        elif t == "date":
-            kinds.append("date")
-        elif t.startswith("timestamp"):
-            kinds.append("datetime")
-        elif t == "bigint" and f.metadata.get("time") == "ns_since_midnight":
-            kinds.append("time")
-        else:
-            kinds.append("num")
+    kinds = column_kinds(fields)
+    aggs = [F.count(F.lit(1)).alias("__n")] + [
+        F.max(F.octet_length(n)).alias(f"__w_{n}")
+        for n, k in zip(names, kinds)
+        if k == "str"
+    ]
     stats = df.agg(*aggs).collect()[0].asDict()
     widths = [
         max(int(stats.get(f"__w_{f.name}") or 1), 1) if k == "str" else 0

@@ -41,7 +41,11 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from polars_readstat_spark.writers import str_cell_matrix, ts_epoch_seconds
+from polars_readstat_spark.writers import (
+    column_kinds,
+    str_cell_matrix,
+    ts_epoch_seconds,
+)
 from polars_readstat_spark.writers.tagged import (
     NO_TAG as _TAG_NONE,
     parse_tag_offsets as _parse_tag_offsets,
@@ -86,21 +90,12 @@ def _sas_columns(df: DataFrame):
                 f"write_sas7bdat: column name {n!r} exceeds the 32-byte "
                 "sas7bdat name limit"
             )
-    kinds = []
-    aggs = []
-    for f in fields:
-        t = f.dataType.simpleString()
-        if t == "string":
-            kinds.append("str")
-            aggs.append(F.max(F.octet_length(f.name)).alias(f"__w_{f.name}"))
-        elif t == "date":
-            kinds.append("date")
-        elif t.startswith("timestamp"):
-            kinds.append("datetime")
-        elif t == "bigint" and f.metadata.get("time") == "ns_since_midnight":
-            kinds.append("time")
-        else:
-            kinds.append("num")
+    kinds = column_kinds(fields)
+    aggs = [
+        F.max(F.octet_length(n)).alias(f"__w_{n}")
+        for n, k in zip(names, kinds)
+        if k == "str"
+    ]
     return fields, names, kinds, aggs
 
 
@@ -1364,10 +1359,10 @@ def write_sas7bdat(
     """Write a Spark DataFrame as an uncompressed 64-bit LE sas7bdat.
 
     Same two-phase shape as the other single-file writers: one
-    pre-pass aggregation resolves string widths, then a
-    partition-ordered Arrow-chunk stream (iter_arrow_chunks) packs
-    vectorized batches onto DATA pages. Use ``write_sas7bdat_partitioned`` for
-    the distributed bulk-export path.
+    pre-pass aggregation resolves string widths, then executors pack
+    (and encode) row chunks that the driver lays onto pages in
+    partition order. Use ``write_readstat_partitioned(df, dir,
+    ext="sas7bdat")`` for the distributed bulk-export path.
 
     numeric_lengths: SAS ``LENGTH var 3-8;`` truncated numeric
     storage — col → bytes (3..8). Keeps sign + exponent + the top
@@ -1481,7 +1476,7 @@ def write_sas7bdat(
     # the cluster for the encode and let the driver restore order.
     # Single-file export is the convenience path — the repartition
     # moves chunk bytes once; bulk exports go through
-    # write_sas7bdat_partitioned which never funnels through a driver.
+    # write_readstat_partitioned which never funnels through a driver.
     # row packing (per-row Python on string cells) dominates plain
     # exports the same way the RLE/RDC encode dominates compressed
     # ones, and toLocalIterator runs a narrow pack stage one partition

@@ -39,7 +39,11 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from polars_readstat_spark.writers import str_cell_matrix, ts_epoch_seconds
+from polars_readstat_spark.writers import (
+    column_kinds,
+    str_cell_matrix,
+    ts_epoch_seconds,
+)
 
 SYSMIS_BITS = 0xFFEFFFFFFFFFFFFF
 SPSS_SEC_SHIFT = 12_219_379_200
@@ -77,26 +81,12 @@ def _sav_columns(df: DataFrame):
     fields = df.schema.fields
     names = [f.name for f in fields]
     shorts = _short_names(names)
-    kinds = []
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for f in fields:
-        t = f.dataType.simpleString()
-        if t == "string":
-            kinds.append("str")
-            aggs.append(
-                F.max(F.octet_length(f.name)).alias(f"__w_{f.name}")
-            )
-        elif t == "date":
-            kinds.append("date")
-        elif t.startswith("timestamp"):
-            kinds.append("datetime")
-        elif t == "bigint" and f.metadata.get("time") == "ns_since_midnight":
-            kinds.append("time")
-        elif t in ("tinyint", "smallint", "int", "bigint", "float",
-                   "double", "boolean", "decimal", "short", "long") or t.startswith("decimal"):
-            kinds.append("num")
-        else:
-            raise ValueError(f"write_sav: unsupported type {t} for {f.name}")
+    kinds = column_kinds(fields)
+    aggs = [F.count(F.lit(1)).alias("__n")] + [
+        F.max(F.octet_length(n)).alias(f"__w_{n}")
+        for n, k in zip(names, kinds)
+        if k == "str"
+    ]
     return fields, names, shorts, kinds, aggs
 
 

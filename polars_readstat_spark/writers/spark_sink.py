@@ -11,8 +11,14 @@ Each executor task assembles one complete part-file for its partition
 a dot-prefixed name and renamed by the driver-side ``commit`` so a
 failed job never leaves torn files visible; ``abort`` removes the
 staging. On a real cluster the directory must be storage both the
-executors and the driver can reach (the same contract as
-writers/partitioned.py).
+executors and the driver can reach.
+
+``write_part`` is the one per-partition-file path: the sink, the
+stream sink, the hive layout (writers/hive.py) and
+``write_readstat_partitioned`` (writers/partitioned.py) all call it.
+It converts a partition's Arrow batches (the zone-map accumulator
+rides along), writes the file, and re-keys the stats by the reader's
+column names.
 
 Supported formats: ``sas7bdat`` (plus ``compress=rle``), ``sav``,
 ``zsav`` (zlib block container), ``xpt``, and ``dta``. The first four
@@ -21,9 +27,10 @@ string-width pass yields part-files that union under one Spark
 schema; ``dta`` instead uses a schema-deterministic sentinel-safe
 type plan (tinyint→int, smallint→long, int/bigint→double exact to
 ±2^53 with a loud per-partition guard beyond) so every partition
-emits identical column types — ``write_dta_partitioned`` remains the
-path that narrows integer storage from global min/max when file size
-matters more than schema-only planning.
+emits identical column types. ``write_readstat_partitioned`` instead
+hands ``write_part`` a plan from one global pre-pass: shared string
+widths, and for dta the integer narrowing from global min/max, for
+when file size matters more than schema-only planning.
 
 Timestamps are converted executor-side from the Arrow representation:
 tz-aware arrays go through ``pyarrow.compute.local_timestamp`` first,
@@ -50,6 +57,7 @@ from polars_readstat_spark.writers.sas7bdat import (
     SAS_DAY_SHIFT,
     SAS_SEC_SHIFT,
 )
+from polars_readstat_spark.writers import column_kinds
 from polars_readstat_spark.writers.sav import SPSS_SEC_SHIFT
 
 # (date multiplier, date shift, datetime seconds shift) per format,
@@ -93,9 +101,9 @@ def plan_write(schema, options):
     """Driver-side column plan from the declared schema alone.
 
     Returns (fmt, fields, names, shorts, kinds): `shorts` is None for
-    formats that keep full names (sas7bdat, dta). dta's kinds are
-    unused — its column plan is built schema-only in _write_dta_part
-    (see module docstring)."""
+    formats that keep full names (sas7bdat, dta). dta's kinds drive
+    only the zone maps — its storage plan is _dta_schema_cols or a
+    global ``plan`` (see module docstring)."""
     fmt = (options.get("format") or options.get("ext") or "").lstrip(".").lower()
     if not fmt:
         path = options.get("path", "")
@@ -106,32 +114,9 @@ def plan_write(schema, options):
             f"df.write.format('readstat'): set .option('format', ...) to "
             f"one of {sorted([*_EPOCH, 'dta'])} (got {fmt!r})"
         )
-    # this runs inside the Python planning worker (no SparkSession),
-    # so the kind mapping is replicated here without pyspark Columns —
-    # the rules mirror each writer's _*_columns exactly
     fields = schema.fields
     names = [f.name for f in fields]
-    kinds = []
-    for f in fields:
-        t = f.dataType.simpleString()
-        if t == "string":
-            kinds.append("str")
-        elif t == "date":
-            kinds.append("date")
-        elif t.startswith("timestamp"):
-            kinds.append("datetime")
-        elif t == "bigint" and f.metadata.get("time") == "ns_since_midnight":
-            kinds.append("time")
-        elif t in (
-            "tinyint", "smallint", "int", "bigint", "float", "double",
-            "boolean",
-        ) or t.startswith("decimal"):
-            kinds.append("num")
-        else:
-            raise ValueError(
-                f"df.write.format('readstat'): unsupported type {t} "
-                f"for column {f.name}"
-            )
+    kinds = column_kinds(fields)
     if fmt in ("sas7bdat", "dta"):
         if fmt == "sas7bdat":
             for n in names:
@@ -150,6 +135,18 @@ def plan_write(schema, options):
 
         shorts = _short_names(names)
     return fmt, fields, names, shorts, kinds
+
+
+def _as_float64(arr):
+    """Numeric Arrow array → float64. Decimals go through their exact
+    decimal strings: Arrow's direct decimal→double cast is not
+    correctly rounded (it is off by an ulp on a few percent of
+    values), while Spark's cast and the dta packer's float() are."""
+    import pyarrow as pa
+
+    if pa.types.is_decimal(arr.type):
+        arr = arr.cast(pa.string())
+    return arr.cast(pa.float64())
 
 
 def _utf8_width(arr) -> int:
@@ -229,9 +226,8 @@ class ZoneMapStats:
     ≥ ~8.99e307, SPSS sysmis is -DBL_MAX) read back as NULL, ±inf
     silently lands as 0.0 in xpt's IBM floats, and xpt flushes
     magnitudes below 16^-65 (~5.4e-79) to 0.0 — each a value outside
-    the recorded range (review r12). Columns are looked up BY NAME so
-    batches built from pandas frames (the partitioned writers)
-    accumulate the same way as the sink's Arrow batches."""
+    the recorded range (review r12). Columns are looked up BY NAME, so
+    a batch may carry any subset of the columns in any order."""
 
     # |v| at/above this may be a missing code on disk (dta missing
     # doubles start at 0x7fe0... ≈ 8.988e307; sav sysmis = -DBL_MAX);
@@ -371,6 +367,9 @@ class ZoneMapStats:
             if st[4]:
                 continue
             valid = arr.drop_null()
+            if pa.types.is_decimal(valid.type):
+                # stored as doubles: range over the written values
+                valid = _as_float64(valid)
             if self.kind_of[name] == "str":
                 st[2] += len(valid)
                 if len(valid) < len(arr):
@@ -396,24 +395,14 @@ class ZoneMapStats:
                     continue
             elif self.kind_of[name] == "date":
                 if len(valid):
-                    if pa.types.is_floating(valid.type):
-                        # cast-frame representation (partitioned
-                        # sav/xpt/sas tasks): NaN is the null-on-disk
-                        # sentinel — exclude from nn AND min/max,
-                        # like the numeric branch
-                        valid = valid.filter(
-                            pc.invert(pc.is_nan(valid))
-                        )
-                    if len(valid):
-                        days = self._date_days(valid)
-                        if days is None:
-                            # non-midnight timestamps / fractional
-                            # day counts / unknown encodings: range
-                            # refutation would be unsound
-                            st[0] = st[1] = None
-                            st[4] = True
-                            continue
-                        valid = days
+                    days = self._date_days(valid)
+                    if days is None:
+                        # non-midnight timestamps / non-date
+                        # encodings: range refutation would be unsound
+                        st[0] = st[1] = None
+                        st[4] = True
+                        continue
+                    valid = days
             elif pa.types.is_floating(valid.type) and len(valid):
                 # NaN doubles become missing sentinels on disk and
                 # read back as NULL — for zone-map purposes they are
@@ -455,11 +444,10 @@ class ZoneMapStats:
                 st[1] = mx
 
     def _date_days(self, valid):
-        """Normalize a date-kind array — in whichever representation
-        the calling writer holds (logical date32/64, pandas-derived
-        timestamps, or the cast frames' format-epoch numerics) — to
-        exact epoch-day integers, or None when refutation over the
-        values would be unsound (the caller poisons the column)."""
+        """Normalize a date-kind array (logical date32/64, or
+        midnight timestamps) to exact epoch-day integers, or None
+        when refutation over the values would be unsound (the caller
+        poisons the column) — numbers in a date column always are."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -483,35 +471,7 @@ class ZoneMapStats:
             if not pc.all(pc.equal(back, v)).as_py():
                 return None  # non-midnight timestamp in a date column
             return pc.cast(d, pa.int32())
-        if pa.types.is_integer(t) or pa.types.is_floating(t):
-            ep = _EPOCH.get(self.fmt)
-            if ep is None:
-                return None  # no epoch mapping for this format
-            mul, dadd, _ = ep
-            f = pc.cast(valid, pa.float64())
-            # stored = (days + dadd) * mul, both terms exact floats
-            days = pc.subtract(
-                pc.divide(f, pa.scalar(mul)), pa.scalar(dadd)
-            )
-            r = pc.round(days)
-            if not pc.all(pc.equal(days, r)).as_py():
-                return None  # fractional day count
-            return pc.cast(r, pa.int64())
         return None
-
-    def add_pandas(self, pdf) -> None:
-        """Accumulate from a pandas frame (partitioned-writer tasks):
-        one Arrow conversion of the stats-relevant columns only.
-        pandas NaN/None become Arrow nulls, matching how the packers
-        treat them (missing sentinels → read back as null)."""
-        import pyarrow as pa
-
-        cols = [c for c in self.stats if c in pdf.columns]
-        if not cols:
-            return
-        self.add(
-            pa.RecordBatch.from_pandas(pdf[cols], preserve_index=False)
-        )
 
 
 def convert_batches(
@@ -573,7 +533,7 @@ def convert_batches(
             elif k == "time":
                 s = arr.cast(pa.float64()).to_pandas() / 1e9
             else:
-                s = arr.cast(pa.float64()).to_pandas()
+                s = _as_float64(arr).to_pandas()
             cols[name] = s
         frames.append(pd.DataFrame(cols))
     return frames, widths, acc
@@ -624,7 +584,7 @@ def stats_reader_keys(stats, fmt, names, shorts):
     pushed filters carry or refutation lookups never match. Only xpt
     renames (uppercase 8-char shorts); sav restores long names via
     the subtype-13 record and dta/sas7bdat keep full names."""
-    if fmt != "xpt" or not shorts:
+    if fmt != "xpt" or not shorts or not stats:
         return stats
     ren = dict(zip(names, shorts))
     return {ren.get(c, c): v for c, v in stats.items()}
@@ -703,15 +663,84 @@ def publish_stats_manifest(dir_path, parts, merge=True) -> None:
         pass
 
 
-def write_partition_file(
-    staged_path, fmt, fields, names, shorts, kinds, frames, widths_map,
-    options,
-):
-    """Assemble one part-file from converted pandas frames."""
-    if fmt == "dta":
-        return _write_dta_part(
-            staged_path, fields, names, frames, widths_map, options
+def part_rows_batch(rows):
+    """Task result of the layouts whose tasks write final files (the
+    hive layout and write_readstat_partitioned): one Arrow row per
+    file, (path, n_rows, JSON [stats, stripes, blooms]) from
+    write_part's result."""
+    import json
+
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([r[0] for r in rows], pa.string()),
+            pa.array([r[1] for r in rows], pa.int64()),
+            pa.array([json.dumps(r[2:]) for r in rows], pa.string()),
+        ],
+        names=["path", "n_rows", "stats"],
+    )
+
+
+PART_ROWS_SCHEMA = "path string, n_rows long, stats string"
+
+
+def publish_part_rows(results) -> list[dict]:
+    """Driver side of part_rows_batch: publish one _prs_stats.json
+    per directory the collected files landed in (merge=True keeps
+    valid entries from earlier exports into the same directory —
+    stale ones are defused by the reader's size+mtime validation).
+    Returns [{"path", "n_rows"}, ...]."""
+    import json
+
+    by_dir: dict[str, list] = {}
+    for r in results:
+        by_dir.setdefault(os.path.dirname(r.path), []).append(
+            (r.path, r.n_rows, *json.loads(r.stats))
         )
+    for d, parts in by_dir.items():
+        publish_stats_manifest(d, parts, merge=True)
+    return [{"path": r.path, "n_rows": r.n_rows} for r in results]
+
+
+def write_part(
+    batches, staged_path, fmt, fields, names, shorts, kinds, options,
+    plan=None, **labels,
+):
+    """One partition's Arrow batches → one part-file at
+    ``staged_path``: convert them (the zone-map accumulator rides
+    along), write the file, and re-key stats, stripes and blooms by
+    what the reader calls the columns. Returns (n_rows, stats,
+    stripes, blooms); an empty partition writes nothing and returns
+    n_rows 0. ``plan`` and ``labels`` pass to write_partition_file."""
+    # stream straight off the iterator: holding the Arrow batches AND
+    # the converted frames would double the partition's peak
+    frames, widths, acc = convert_batches(
+        batches, names, kinds, fmt,
+        stripe_rows=_stripe_rows_opt(options),
+        bloom_cols=_bloom_cols_opt(options),
+        bloom_max_bytes=_bloom_max_bytes_opt(options),
+    )
+    if not any(len(p) for p in frames):
+        return 0, None, None, None
+    n = write_partition_file(
+        staged_path, fmt, fields, names, shorts, kinds, frames, widths,
+        options, plan, **labels,
+    )
+
+    def rekey(stats):
+        return stats_reader_keys(stats, fmt, names, shorts)
+
+    stripes = acc.stripes_payload()
+    if stripes is not None:
+        stripes["cols"] = [rekey(c) for c in stripes["cols"]]
+    return n, rekey(acc.stats), stripes, rekey(acc.bloom_payload())
+
+
+def format_widths(fmt, fields, kinds, widths_map) -> list[int]:
+    """Per-column storage widths for sav/zsav/xpt/sas7bdat: string
+    byte widths from ``widths_map`` (checked against the format's
+    char limit), numerics 8 bytes (sav/zsav: 0, one element)."""
     limit = _STR_LIMIT[fmt]
     widths = []
     for f, k in zip(fields, kinds):
@@ -725,7 +754,42 @@ def write_partition_file(
             widths.append(w)
         else:
             widths.append(0 if fmt in ("sav", "zsav") else 8)
+    return widths
+
+
+def write_partition_file(
+    staged_path, fmt, fields, names, shorts, kinds, frames, widths_map,
+    options, plan=None, variable_labels=None, value_labels=None,
+    measures=None, version=5,
+):
+    """Assemble one part-file from converted pandas frames.
+
+    ``plan``, when given, replaces the partition-local column plan
+    with a global one so every part shares one layout: the
+    format_widths list (sav/zsav/xpt/sas7bdat) or dta's column list
+    from dta._finalize_cols. The label arguments mean what they mean
+    in the single-file writers; ``data_label`` and ``dataset_name``
+    come from ``options``."""
+    variable_labels = variable_labels or {}
     n_rows = sum(len(p) for p in frames)
+    if fmt == "dta":
+        from polars_readstat_spark.writers.dta import (
+            _assemble_dta,
+            _pack_stream,
+        )
+
+        cols = plan or _dta_schema_cols(fields, frames, widths_map)
+        data, strls, _ = _pack_stream(cols, frames)
+        with _fs_open_output(staged_path) as fh:
+            fh.write(
+                _assemble_dta(
+                    cols, data, strls, n_rows,
+                    options.get("data_label", ""), variable_labels,
+                    value_labels or {},
+                )
+            )
+        return n_rows
+    widths = plan or format_widths(fmt, fields, kinds, widths_map)
 
     if fmt == "sas7bdat":
         from polars_readstat_spark.writers.sas7bdat import _SasFileSink
@@ -733,7 +797,7 @@ def write_partition_file(
         with _fs_open_output(staged_path) as fh:
             sink = _SasFileSink(
                 fh, fields, names, kinds, widths,
-                options.get("dataset_name", "DATA"), {},
+                options.get("dataset_name", "DATA"), variable_labels,
                 int(options["page_length"]) if options.get("page_length") else None,
                 options.get("compress"),
             )
@@ -753,7 +817,8 @@ def write_partition_file(
         case_size = sum(el_per)
         head = _sav_dictionary(
             fields, names, shorts, kinds, widths, el_per, case_size,
-            n_rows, zsav, options.get("data_label", ""), {}, {}, {},
+            n_rows, zsav, options.get("data_label", ""), variable_labels,
+            value_labels or {}, measures or {},
         )
         with _fs_open_output(staged_path) as fh:
             fh.write(bytes(head))
@@ -771,11 +836,12 @@ def write_partition_file(
     else:  # xpt
         from polars_readstat_spark.writers.xpt import _pack_xpt, _xpt_header
 
-        record_width = sum(w if k == "str" else 8 for w, k in zip(widths, kinds))
+        record_width = sum(widths)
         head = bytes(
             _xpt_header(
                 fields, shorts, kinds, widths,
-                options.get("dataset_name", "DATA"), {}, 5,
+                options.get("dataset_name", "DATA"), variable_labels,
+                version,
             )
         )
         with _fs_open_output(staged_path) as fh:
@@ -792,19 +858,16 @@ def write_partition_file(
     return n_rows
 
 
-def _write_dta_part(staged_path, fields, names, frames, widths_map, options):
-    """dta part-file with a schema-deterministic, sentinel-safe column
-    plan: every partition maps the same Spark type to the same Stata
-    type regardless of its values, so part-files always union under
-    one schema (write_dta's stats-tightened narrowing would let two
+def _dta_schema_cols(fields, frames, widths_map) -> list[tuple]:
+    """The sink's dta column plan, used when write_partition_file gets
+    no global ``plan``: schema-deterministic and sentinel-safe, so
+    every partition maps the same Spark type to the same Stata type
+    regardless of its values and part-files always union under one
+    schema (write_dta's stats-tightened narrowing would let two
     partitions disagree). tinyint→int and smallint→long clear the
     Stata missing-sentinel bands; int/bigint→double is exact to ±2^53
     with a loud per-partition guard beyond (mirroring write_dta)."""
-    from polars_readstat_spark.writers.dta import (
-        _DOUBLE_EXACT_INT,
-        _assemble_dta,
-        _pack_stream,
-    )
+    from polars_readstat_spark.writers.dta import _DOUBLE_EXACT_INT
 
     cols = []
     bigcheck = []
@@ -850,13 +913,7 @@ def _write_dta_part(staged_path, fields, names, frames, widths_map, options):
                     "outside ±2^53; Stata's widest numeric type (double) "
                     "cannot represent them exactly"
                 )
-    data, strls, n_rows = _pack_stream(cols, frames)
-    out = _assemble_dta(
-        cols, data, strls, n_rows, options.get("data_label", ""), {}, {},
-    )
-    with _fs_open_output(staged_path) as fh:
-        fh.write(out)
-    return n_rows
+    return cols
 
 
 class ReadstatDataSourceWriter(DataSourceArrowWriter):
@@ -881,22 +938,11 @@ class ReadstatDataSourceWriter(DataSourceArrowWriter):
     def write(self, iterator):
         from pyspark import TaskContext
 
+        from polars_readstat_spark.sources.fs import fs_join
+
         ctx = TaskContext.get()
         pid = ctx.partitionId()
         attempt = ctx.taskAttemptId()
-        # stream straight off the iterator: holding the Arrow batches
-        # AND the converted frames would double the partition's peak
-        frames, widths, acc = convert_batches(
-            iterator, self.names, self.kinds, self.fmt,
-            stripe_rows=_stripe_rows_opt(self.options),
-            bloom_cols=_bloom_cols_opt(self.options),
-            bloom_max_bytes=_bloom_max_bytes_opt(self.options),
-        )
-        stats = acc.stats
-        if not any(len(p) for p in frames):
-            return _PartMessage("", "", 0)
-        from polars_readstat_spark.sources.fs import fs_join
-
         final = fs_join(
             self.path, f"part-{pid:05d}-{self.run_id}.{self.fmt}"
         )
@@ -906,24 +952,12 @@ class ReadstatDataSourceWriter(DataSourceArrowWriter):
             self.path,
             f".staged-{self.run_id}-a{attempt}-part-{pid:05d}.{self.fmt}",
         )
-        n = write_partition_file(
-            staged, self.fmt, self.fields, self.names, self.shorts,
-            self.kinds, frames, widths, self.options,
+        n, stats, stripes, blooms = write_part(
+            iterator, staged, self.fmt, self.fields, self.names,
+            self.shorts, self.kinds, self.options,
         )
-        stats = stats_reader_keys(stats, self.fmt, self.names, self.shorts)
-        stripes = acc.stripes_payload()
-        if stripes is not None:
-            stripes["cols"] = [
-                stats_reader_keys(c, self.fmt, self.names, self.shorts)
-                for c in stripes["cols"]
-            ]
-        blooms = acc.bloom_payload()
-        if blooms is not None:
-            # same re-key rule as the stats: manifest keys must match
-            # what the READER calls the columns (xpt shorts)
-            blooms = stats_reader_keys(
-                blooms, self.fmt, self.names, self.shorts
-            )
+        if not n:
+            return _PartMessage("", "", 0)
         return _PartMessage(
             staged, final, n, stats=stats, stripes=stripes, blooms=blooms
         )
@@ -1003,43 +1037,22 @@ class ReadstatStreamWriter(DataSourceStreamArrowWriter):
 
         from polars_readstat_spark.sources.fs import fs_join
 
-        ctx = TaskContext.get()
-        pid = ctx.partitionId()
+        pid = TaskContext.get().partitionId()
+        staged = fs_join(
+            self.path,
+            f".staged-stream-{uuid.uuid4().hex[:12]}-p{pid:05d}.{self.fmt}",
+        )
         # the accumulator runs over the batches anyway — publishing
         # its zone maps (and opt-in blooms) at commit gives the
         # landing directory file skipping for free (round 13: before
         # this the stats were computed and DISCARDED, so streamed
         # lakes needed a separate index_zonemaps pass)
-        frames, widths, acc = convert_batches(
-            iterator, self.names, self.kinds, self.fmt,
-            stripe_rows=_stripe_rows_opt(self.options),
-            bloom_cols=_bloom_cols_opt(self.options),
-            bloom_max_bytes=_bloom_max_bytes_opt(self.options),
+        n, stats, stripes, blooms = write_part(
+            iterator, staged, self.fmt, self.fields, self.names,
+            self.shorts, self.kinds, self.options,
         )
-        if not any(len(p) for p in frames):
+        if not n:
             return _PartMessage("", "", 0, pid)
-        staged = fs_join(
-            self.path,
-            f".staged-stream-{uuid.uuid4().hex[:12]}-p{pid:05d}.{self.fmt}",
-        )
-        n = write_partition_file(
-            staged, self.fmt, self.fields, self.names, self.shorts,
-            self.kinds, frames, widths, self.options,
-        )
-        stats = stats_reader_keys(
-            acc.stats, self.fmt, self.names, self.shorts
-        )
-        stripes = acc.stripes_payload()
-        if stripes is not None:
-            stripes["cols"] = [
-                stats_reader_keys(c, self.fmt, self.names, self.shorts)
-                for c in stripes["cols"]
-            ]
-        blooms = acc.bloom_payload()
-        if blooms is not None:
-            blooms = stats_reader_keys(
-                blooms, self.fmt, self.names, self.shorts
-            )
         return _PartMessage(
             staged, "", n, pid, stats=stats, stripes=stripes, blooms=blooms
         )

@@ -24,7 +24,11 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from polars_readstat_spark.writers import str_cell_matrix, ts_epoch_seconds
+from polars_readstat_spark.writers import (
+    column_kinds,
+    str_cell_matrix,
+    ts_epoch_seconds,
+)
 from polars_readstat_spark.writers.tagged import (
     NO_TAG as _TAG_NONE,
     parse_tag_offsets as _parse_tag_offsets,
@@ -153,11 +157,10 @@ def write_xpt(
     out = _xpt_header(
         fields, shorts, kinds, widths, dataset_name, variable_labels, version
     )
-    src = _xpt_cast(
-        df, fields, kinds,
-        extra=[F.col(c).cast("string").alias(f"__tag_{i}")
-               for i, c in enumerate(ind_names)],
-    )
+    tag_exprs = [
+        F.col(c).cast("string").alias(f"__tag_{i}")
+        for i, c in enumerate(ind_names)
+    ]
 
     # packing (incl. IEEE→IBM) runs on the executors; the driver only
     # concatenates fixed-width records in partition order. Big exports
@@ -189,10 +192,6 @@ def write_xpt(
         "polars_readstat_spark.writers.tagged",
         "polars_readstat_spark.writers",
     )
-    tag_exprs = [
-        F.col(c).cast("string").alias(f"__tag_{i}")
-        for i, c in enumerate(ind_names)
-    ]
     # wide protocol: cast AFTER the repartition (guide §2.3) — the
     # range-bounds sampling pass then re-executes only the bare scan
     # + order tags, not the date/double casts (same fix as sav)
@@ -206,7 +205,10 @@ def write_xpt(
             ),
         )
         if int(stats["__n"]) >= 100_000
-        else iter_packed_chunks(src, pack_fn, 8192, modules=xpt_mods)
+        else iter_packed_chunks(
+            _xpt_cast(df, fields, kinds, extra=tag_exprs), pack_fn, 8192,
+            modules=xpt_mods,
+        )
     )
     with fs_open_output(path) as fh:
         fh.write(bytes(out))
@@ -221,21 +223,12 @@ def _xpt_columns(df: DataFrame):
     fields = df.schema.fields
     names = [f.name for f in fields]
     shorts = _short_names(names)
-    kinds = []
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for f in fields:
-        t = f.dataType.simpleString()
-        if t == "string":
-            kinds.append("str")
-            aggs.append(F.max(F.octet_length(f.name)).alias(f"__w_{f.name}"))
-        elif t == "date":
-            kinds.append("date")
-        elif t.startswith("timestamp"):
-            kinds.append("datetime")
-        elif t == "bigint" and f.metadata.get("time") == "ns_since_midnight":
-            kinds.append("time")
-        else:
-            kinds.append("num")
+    kinds = column_kinds(fields)
+    aggs = [F.count(F.lit(1)).alias("__n")] + [
+        F.max(F.octet_length(n)).alias(f"__w_{n}")
+        for n, k in zip(names, kinds)
+        if k == "str"
+    ]
     return fields, names, shorts, kinds, aggs
 
 

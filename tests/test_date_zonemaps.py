@@ -77,26 +77,6 @@ def test_date64_subday_millis_poison():
     assert bad.stats["d"][4] is True
 
 
-@pytest.mark.parametrize("fmt,mul_shift", [
-    ("sas7bdat", None), ("xpt", None), ("sav", None), ("zsav", None),
-])
-def test_cast_frame_float_representation(fmt, mul_shift):
-    """The partitioned writers' tasks hand the accumulator
-    format-epoch floats; they must decode back to the same days the
-    sink's logical date32 path records — NaN (null-on-disk) excluded
-    from nn and range."""
-    from polars_readstat_spark.writers.spark_sink import _EPOCH
-
-    mul, dadd, _ = _EPOCH[fmt]
-    days = [_days(dt.date(1994, 1, 1)), _days(dt.date(2020, 2, 29))]
-    stored = [(x + dadd) * mul for x in days] + [float("nan")]
-    acc = _acc(fmt)
-    acc.add(_b(pa.array(stored, type=pa.float64())))
-    st = acc.stats["d"]
-    assert st[:4] == [days[0], days[1], 2, 3]
-    assert st[4] is False
-
-
 def test_fractional_day_float_poisons():
     acc = _acc("sas7bdat")
     acc.add(_b(pa.array([3.5], type=pa.float64())))

@@ -377,12 +377,12 @@ def test_distributed_sink_through_seam(spark, tmp_path):
 
 
 def test_partitioned_export_through_seam(spark, tmp_path):
-    """write_dta_partitioned to a non-POSIX URI: per-partition staged
-    upload + filesystem-level publish."""
+    """write_readstat_partitioned (dta) to a non-POSIX URI:
+    per-partition staged upload + filesystem-level publish."""
     import polars_readstat_spark as prs
 
     from polars_readstat_spark.writers.partitioned import (
-        write_dta_partitioned,
+        write_readstat_partitioned,
     )
 
     prs.register(spark)
@@ -390,7 +390,7 @@ def test_partitioned_export_through_seam(spark, tmp_path):
     sdf = spark.range(500).selectExpr(
         "cast(id as long) as id", "concat('v', id) as s"
     ).repartition(3)
-    parts = write_dta_partitioned(sdf, "simlat0://" + out)
+    parts = write_readstat_partitioned(sdf, "simlat0://" + out, ext="dta")
     assert sum(p["n_rows"] for p in parts) == 500
     assert all(p["path"].startswith("simlat0://") for p in parts)
     back = spark.read.format("readstat").load(out)

@@ -142,3 +142,123 @@ def test_xpt_roundtrip_dir_write_dir_read(spark, tmp_path):
     rows = {int(r.K): r for r in back.collect()}
     assert rows[9999].S == "row9999" and rows[9999].V == 9999 * 2.5
     assert str(rows[0].D) == "2020-01-01"
+
+
+def _typed_src(spark):
+    """3000 rows over 4 partitions: nulls in every non-key column,
+    dates on both sides of the 1960 SAS/Stata epoch, and timestamps
+    with a sub-second part."""
+    return spark.range(0, 3000, 1, 4).selectExpr(
+        "id as k",
+        "case when id % 7 = 0 then null else cast(id * 0.5 as double) end as v",
+        "case when id % 5 = 0 then null "
+        "else concat('row', cast(id as string)) end as s",
+        "case when id % 6 = 0 then null "
+        "else date_add(date'1959-12-20', cast(id * 37 as int)) end as d",
+        "case when id % 9 = 0 then null "
+        "else timestamp_micros(946684800000000 + id * 86400123457) end as ts",
+    )
+
+
+# timestamp precision the reader hands back per format, in µs: dta
+# stores %tc milliseconds, sav/zsav whole seconds
+_TS_TOL_US = {"dta": 1000, "sav": 1_000_000, "zsav": 1_000_000, "xpt": 1, "sas7bdat": 1}
+
+
+@pytest.mark.parametrize("fmt", ["dta", "sav", "zsav", "xpt", "sas7bdat"])
+def test_roundtrip_matrix_non_utc_session(spark, tmp_path, fmt):
+    """Every distributed format roundtrips nulls, dates and sub-second
+    timestamps under a non-UTC session timezone: timestamps keep the
+    session's wall clock, null strings read back blank."""
+    import datetime as dt
+
+    import polars_readstat_spark as prs
+
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        src = _typed_src(spark)
+        d = str(tmp_path / fmt)
+        res = prs.write_readstat_partitioned(src, d, ext=fmt)
+        assert len(res) == 4 and sum(r["n_rows"] for r in res) == 3000
+        back = spark.read.format("readstat").load(d)
+        name = {c.lower(): c for c in back.columns}
+        pat = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+
+        def rows(df, col):
+            return {
+                int(r[0]): tuple(r[1:])
+                for r in df.selectExpr(
+                    *(f"`{col(c)}`" for c in ("k", "v", "s", "d")),
+                    f"date_format(`{col('ts')}`, '{pat}')",
+                ).collect()
+            }
+
+        want = rows(src, lambda c: c)
+        got = rows(back, name.get)
+    finally:
+        spark.conf.set(key, prev)
+    assert sorted(got) == sorted(want)
+
+    def us(text):
+        return dt.datetime.strptime(text, "%Y-%m-%d %H:%M:%S.%f")
+
+    for k, (v, s, day, ts) in want.items():
+        gv, gs, gday, gts = got[k]
+        assert (gv, gs, gday) == (v, s or "", day), k
+        if ts is None:
+            assert gts is None, k
+        else:
+            lag = abs((us(gts) - us(ts)) / dt.timedelta(microseconds=1))
+            assert lag < _TS_TOL_US[fmt], (k, ts, gts)
+
+
+@pytest.mark.parametrize("fmt", ["dta", "sav", "zsav", "xpt", "sas7bdat"])
+def test_partitioned_export_keeps_labels(spark, tmp_path, fmt):
+    """The single-file writers' labels survive the distributed path in
+    every part: data and value labels (dta, sav), variable labels (all
+    formats), sav measures, and xpt version-8 long names — read back
+    through the metadata surface."""
+    import polars_readstat_spark as prs
+
+    df = spark.range(0, 300, 1, 3).selectExpr(
+        "id as k",
+        "cast(id % 3 as int) as code",
+        "concat('r', cast(id as string)) as a_long_variable_name",
+    )
+    var_labels = {
+        "k": "Row key",
+        "code": "Answer code",
+        "a_long_variable_name": "Free text",
+    }
+    kw = {"variable_labels": var_labels}
+    if fmt in ("dta", "sav", "zsav"):
+        kw["data_label"] = "Survey wave 1"
+        kw["value_labels"] = {"code": {1: "yes", 2: "no"}}
+    if fmt in ("sav", "zsav"):
+        kw["measures"] = {"code": "nominal"}
+    if fmt == "xpt":
+        kw["version"] = 8
+    d = str(tmp_path / fmt)
+    res = prs.write_readstat_partitioned(df, d, ext=fmt, **kw)
+    assert len(res) == 3
+    # xpt: names up to 8 characters read back as upper-case short
+    # names; the v8 LABELV8 record carries the long one
+    reader_name = (
+        {"k": "K", "code": "CODE"} if fmt == "xpt" else {}
+    )
+    for r in res:
+        md = prs.read_metadata(r["path"])
+        got = {v["name"]: v for v in md["variables"]}
+        for col, label in var_labels.items():
+            assert got[reader_name.get(col, col)]["label"] == label, col
+        if fmt in ("dta", "sav", "zsav"):
+            assert md["file_label"] == "Survey wave 1"
+            codes = {
+                float(c): lab
+                for c, lab in got["code"]["value_labels"].items()
+            }
+            assert codes == {1.0: "yes", 2.0: "no"}
+        if fmt in ("sav", "zsav"):
+            assert got["code"]["measure"] == "nominal"

@@ -277,3 +277,34 @@ def test_stream_writer_publishes_manifest(spark, tmp_path):
     assert n == 4000 / 512 * 1 or n == len(
         [i for i in range(4000) if i % 512 == 41]
     )
+
+
+@pytest.mark.parametrize("fmt", ["sav", "xpt", "sas7bdat", "dta"])
+def test_decimal_column_exact_doubles_and_manifest(spark, tmp_path, fmt):
+    """Decimals are stored as the correctly rounded double (Spark's
+    cast; Arrow's direct decimal cast misses by an ulp on values like
+    0.35), and their zone maps publish as plain numbers."""
+    import json
+
+    import polars_readstat_spark as prs
+
+    prs.register(spark)
+    df = spark.range(1, 200, 1, 2).selectExpr(
+        "id", "cast(id / 100 as decimal(10, 2)) as amount"
+    )
+    path = str(tmp_path / fmt)
+    df.write.format("readstat").option("format", fmt).mode(
+        "overwrite"
+    ).save(path)
+    want = {
+        r[0]: r[1]
+        for r in df.selectExpr("id", "cast(amount as double)").collect()
+    }
+    back = spark.read.format("readstat").load(path)
+    got = {int(r[0]): r[1] for r in back.collect()}
+    assert got == want  # exact: 0.35 reads back as 0.35
+    m = json.load(open(os.path.join(path, "_prs_stats.json")))
+    amount = "AMOUNT" if fmt == "xpt" else "amount"
+    lo = min(e["cols"][amount]["min"] for e in m["files"].values())
+    hi = max(e["cols"][amount]["max"] for e in m["files"].values())
+    assert (lo, hi) == (0.01, 1.99)

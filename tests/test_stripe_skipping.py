@@ -374,7 +374,7 @@ def test_partitioned_exporter_publishes_stripes(spark, tmp_path):
     """The bulk exporters publish the same stripe geometry (xpt also
     re-keys stripe cols to reader short names)."""
     from polars_readstat_spark.writers.partitioned import (
-        write_xpt_partitioned,
+        write_readstat_partitioned,
     )
 
     d = str(tmp_path / "xpts")
@@ -383,7 +383,7 @@ def test_partitioned_exporter_publishes_stripes(spark, tmp_path):
         .selectExpr("cast(id as double) as longish_name")
         .coalesce(1)
     )
-    write_xpt_partitioned(df, d)
+    write_readstat_partitioned(df, d, ext="xpt")
     m = json.load(open(os.path.join(d, "_prs_stats.json")))
     (entry,) = m["files"].values()
     # 3000 rows < 65536 → single stripe → no payload, file cols only

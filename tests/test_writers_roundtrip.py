@@ -220,3 +220,50 @@ def test_xpt_v8_long_names(spark, tmp_path):
     assert [r[0] for r in back.select("a_very_long_variable_name").collect()] == [
         float(i) for i in range(10)
     ]
+
+
+def _sink(fmt):
+    def write(df, path):
+        df.write.format("readstat").option("format", fmt).mode(
+            "overwrite"
+        ).save(path)
+
+    return write
+
+
+def _writers():
+    from polars_readstat_spark.writers.por import write_por
+    from polars_readstat_spark.writers.sas7bdat import write_sas7bdat
+    from polars_readstat_spark.writers.sav import write_sav
+    from polars_readstat_spark.writers.xpt import write_xpt
+
+    return {
+        "sav": (write_sav, "f.sav"),
+        "xpt": (write_xpt, "f.xpt"),
+        "sas7bdat": (write_sas7bdat, "f.sas7bdat"),
+        "por": (write_por, "f.por"),
+        "sink": (_sink("sav"), "sink_dir"),
+    }
+
+
+@pytest.mark.parametrize("writer", ["sav", "xpt", "sas7bdat", "por", "sink"])
+def test_column_kinds_one_error_and_void(spark, tmp_path, writer):
+    """The writers share one Spark-type → storage-kind mapping: a
+    binary column raises the same ValueError naming column and type in
+    each (the sink's surfaces through Spark's planning worker), while
+    an all-null void column writes an all-missing numeric column."""
+    write, name = _writers()[writer]
+    df = spark.range(3).selectExpr(
+        "cast(id as double) as x", "cast('ab' as binary) as blob"
+    )
+    with pytest.raises(Exception) as err:
+        write(df, str(tmp_path / ("bin_" + name)))
+    assert "unsupported type binary for column 'blob'" in str(err.value)
+    if writer != "sink":
+        assert isinstance(err.value, ValueError)
+
+    path = str(tmp_path / ("void_" + name))
+    write(spark.range(3).selectExpr("cast(id as double) as x", "null as v"), path)
+    back = spark.read.format("readstat").load(path).collect()
+    assert sorted(r[0] for r in back) == [0.0, 1.0, 2.0]
+    assert [r[1] for r in back] == [None] * 3
