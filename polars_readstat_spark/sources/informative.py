@@ -100,8 +100,3 @@ def assemble(
     for k in range(len(s_list)):
         out.append(i_list[k] if vnull[k] else s_list[k])
     return [(name, pa.array(out, type=pa.string()))]
-
-
-def struct_type(value_type: pa.DataType, name: str) -> pa.DataType:
-    return pa.struct([pa.field(name, value_type),
-                      pa.field("null_indicator", pa.string())])

@@ -1,8 +1,11 @@
 """Writers / sinks (SURVEY.md §2.7): Spark DataFrame → statistical
 file formats. Single-file formats with row-count headers ⇒ a pre-pass
-aggregation job (widths/counts/ranges) + a driver-side streaming
-assembly over Arrow chunks (iter_arrow_chunks — the Spark translation
-of the reference's two-pass sink_stata, pybindings.rs:951-1096)."""
+aggregation job (widths/counts/ranges), then executor-side packing
+whose chunks the driver only concatenates in input order — one
+driver, ``export_chunks``, with one threshold table choosing between
+its two arms (``iter_packed_chunks``, ``iter_ordered_packed``). The
+Spark translation of the reference's two-pass sink_stata,
+pybindings.rs:951-1096."""
 
 from __future__ import annotations
 
@@ -22,6 +25,40 @@ def ts_epoch_seconds(c: Column) -> Column:
         + F.second(c).cast("double")
         + F.date_format(c, "SSSSSS").cast("double") / 1e6
     )
+
+
+# epochs relative to the Unix epoch: SAS counts days (dates) or
+# seconds (datetimes) from 1960-01-01, SPSS seconds from 1582-10-14
+SAS_DAY_SHIFT = 3653
+SAS_SEC_SHIFT = 315_619_200
+SPSS_SEC_SHIFT = 12_219_379_200
+
+# epoch_cast targets: (date multiplier, date shift, datetime shift) —
+# SAS dates are days + SAS_DAY_SHIFT, SPSS dates days·86400 +
+# SPSS_SEC_SHIFT; both datetimes are seconds + the seconds shift
+SAS_EPOCH = (1.0, float(SAS_DAY_SHIFT), float(SAS_SEC_SHIFT))
+SPSS_EPOCH = (86400.0, float(SPSS_SEC_SHIFT), float(SPSS_SEC_SHIFT))
+
+
+def epoch_cast(df, fields, kinds, epoch, keep=()):
+    """Select every column as the double the format stores (dates and
+    datetimes shifted to ``epoch``, ns-since-midnight times to seconds;
+    strings pass through), then the ``keep`` columns. The shifts are
+    integer-valued doubles, so every result is exact."""
+    date_mul, date_add, sec_add = epoch
+    sel = []
+    for f, k in zip(fields, kinds):
+        c = F.col(f.name)
+        if k == "num":
+            c = c.cast("double")
+        elif k == "date":
+            c = F.unix_date(c).cast("double") * date_mul + date_add
+        elif k == "datetime":
+            c = ts_epoch_seconds(c) + sec_add
+        elif k == "time":
+            c = c.cast("double") / 1e9
+        sel.append(c.alias(f.name))
+    return df.select(*sel, *keep)
 
 
 # Spark types stored as plain doubles; void (an all-null column, e.g.
@@ -102,7 +139,12 @@ def str_cell_matrix(col, w: int, utf8_boundary: bool = False):
 
 
 def iter_arrow_chunks(df, max_rows: int = 65536):
-    """Partition-ordered Arrow-chunk transport for driver-side sinks.
+    """Partition-ordered Arrow-chunk transport for a driver-side pack.
+
+    Its one user is write_dta with strL columns: the GSO records key
+    on the global row number, which only this ordered driver stream
+    knows, so those rows pack on the driver. Every other single-file
+    export packs on the executors through ``export_chunks``.
 
     `toLocalIterator()` deserializes one pickled Row OBJECT per row on
     the driver — the slowest possible transport for a bulk export.
@@ -187,15 +229,6 @@ def iter_packed_chunks(df, pack_fn, max_rows: int = 8192, modules=()):
         yield row[0], row[1]
 
 
-# chunk-id buckets per core in the wide packing protocol (see
-# iter_ordered_packed). 1, measured: 4x over-partitioning to
-# load-balance unevenly-hashed chunk ids LOST to its own per-task
-# Python-worker overhead in an interleaved A/B at sf0.1 (por
-# 4.2 vs 4.4 s, rle 3.6 vs 3.9, zsav 2.9 vs 3.6) — the straggler
-# tail it targets is smaller than 96 extra mapInArrow task spin-ups.
-_WIDE_FACTOR = 1
-
-
 def iter_ordered_packed(df, pack_fn, max_rows: int = 8192, modules=(), cast=None):
     """Executor packing fanned across every core with JVM-side order
     tags — one Python crossing (round 13; guide §4.1: control how
@@ -247,7 +280,12 @@ def iter_ordered_packed(df, pack_fn, max_rows: int = 8192, modules=(), cast=None
     tagged = df.withColumn(
         "__prs_mid", F.monotonically_increasing_id()
     ).withColumn("__prs_cid", F.expr(f"__prs_mid div {int(max_rows)}"))
-    body = tagged.repartitionByRange(_WIDE_FACTOR * cores, "__prs_cid")
+    # one chunk-id range per core, measured: 4x over-partitioning to
+    # load-balance uneven chunk ids LOST to its own per-task Python-
+    # worker overhead in an interleaved A/B at sf0.1 (por 4.2 vs 4.4 s,
+    # rle 3.6 vs 3.9, zsav 2.9 vs 3.6) — the straggler tail it targets
+    # is smaller than 96 extra mapInArrow task spin-ups
+    body = tagged.repartitionByRange(cores, "__prs_cid")
     if cast is not None:
         body = cast(body)
     names = [c for c in body.columns if c not in ("__prs_mid", "__prs_cid")]
@@ -324,3 +362,48 @@ def iter_ordered_packed(df, pack_fn, max_rows: int = 8192, modules=(), cast=None
             )
     finally:
         staged.unpersist()
+
+
+# Single-file export protocol per format: (wide_min_rows,
+# narrow_chunk_rows, wide_chunk_rows). Below wide_min_rows the export
+# packs in the input's own partitions (iter_packed_chunks); from it
+# upward it takes iter_ordered_packed, because toLocalIterator runs a
+# narrow pack stage about one input partition at a time, which caps
+# pack parallelism at one core whatever the partition count. dta's
+# pack is a cheap numpy recarray fill (~2 s per million rows on one
+# core), so the ordered arm's shuffle + persist costs more than it
+# saves until very large exports (measured at 600k rows: 2.0 s
+# narrow, 3.2 s ordered).
+# The por ladder and the sas7bdat RLE/RDC encode are the costliest
+# packs: their ordered arm uses smaller chunks so they fan across every
+# core (65536-row por chunks capped a 600k-row export at ~10-way).
+EXPORT_THRESHOLDS = {
+    "dta": (2_000_000, 65536, 65536),
+    "sav": (100_000, 8192, 8192),
+    "xpt": (100_000, 8192, 8192),
+    "por": (100_000, 65536, 8192),
+    "sas7bdat": (100_000, 8192, 4096),
+}
+
+
+def export_chunks(df, fmt, n_rows, pack_fn, cast=None, modules=()):
+    """The single-file export driver: yields ``(payload, n)`` packed
+    chunks of ``df`` in input order, whichever arm the row count picks
+    from EXPORT_THRESHOLDS. ``pack_fn`` and ``modules`` are as in
+    iter_packed_chunks. ``cast(frame, keep)`` returns ``frame`` with
+    the columns pack_fn reads, followed by the ``keep`` columns: the
+    narrow arm applies it before the pack stage with no ``keep``; the
+    ordered arm applies it after the range repartition with the order
+    tags as ``keep``, so the shuffle — and the range-bounds sampling
+    pass that re-runs its child — carry the narrow source types, and
+    the row-widening casts run on every core (casting before the
+    shuffle cost the sf0.1 sav export ~0.4 s per run)."""
+    wide_min_rows, narrow_rows, wide_rows = EXPORT_THRESHOLDS[fmt]
+    if n_rows >= wide_min_rows:
+        keep = [F.col("__prs_mid"), F.col("__prs_cid")]
+        return iter_ordered_packed(
+            df, pack_fn, wide_rows, modules,
+            cast=None if cast is None else (lambda b: cast(b, keep)),
+        )
+    src = df if cast is None else cast(df, [])
+    return iter_packed_chunks(src, pack_fn, narrow_rows, modules)

@@ -7,8 +7,10 @@ Two Spark jobs, then a streaming assembly:
    row count — the Spark shape of the reference's sink pre-pass
    (pybindings.rs:996-1047).
 2. **Pack**: batches are packed vectorized (numpy structured array per
-   batch). The driver-side `write_dta` pulls partitions in order via
-   `toLocalIterator()`; the distributed path
+   batch) on the executors, and `write_dta` concatenates the packed
+   chunks in input order (writers.export_chunks); with strL columns
+   the rows pack on the driver instead, off the ordered
+   `iter_arrow_chunks` stream. The distributed path
    (writers/partitioned.py, through the sink's part writer) runs the
    same pack+assemble inside each executor task against its own
    partition, with the column plan from the global pre-pass so every
@@ -558,13 +560,8 @@ def write_dta(
         data, strls, n_rows = _pack_stream(cols, batches, tagged_missing)
     else:
         # fixed-width records with no cross-row state: pack on the
-        # executors, concatenate on the driver in partition order.
-        # Big exports take the all-cores JVM-tagged protocol (see
-        # iter_ordered_packed; same ≥100k-row policy as por/sav/xpt).
-        from polars_readstat_spark.writers import (
-            iter_ordered_packed,
-            iter_packed_chunks,
-        )
+        # executors, concatenate on the driver in input order
+        from polars_readstat_spark.writers import export_chunks
 
         cols_l, tm = list(cols), dict(tagged_missing)
         rec_dtype = _rec_dtype(cols_l)
@@ -589,18 +586,8 @@ def write_dta(
         data = bytearray()
         strls = bytearray()
         n_rows = 0
-        # dta's pack is a vectorized numpy recarray fill (~2 s per
-        # million rows single-core) — cheap enough that the wide
-        # protocol's shuffle+persist costs MORE than it saves at the
-        # 100k scale where the ladder-style packers (por/sav/xpt)
-        # already win; measured 2.0 -> 3.2 s at 600k rows. Only very
-        # large exports take the wide path.
-        chunks_iter = (
-            iter_ordered_packed if int(stats["__n"]) >= 2_000_000
-            else iter_packed_chunks
-        )
-        for payload, n in chunks_iter(
-            src, pack_fn, 65536,
+        for payload, n in export_chunks(
+            src, "dta", int(stats["__n"]), pack_fn,
             modules=(
                 "polars_readstat_spark.writers.dta",
                 "polars_readstat_spark.writers.tagged",

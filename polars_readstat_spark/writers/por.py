@@ -19,7 +19,7 @@ semantics at the format's edge.
 
 POR is an eager single file (the format is legacy interchange, not a
 data-plane format at scale); token packing — the shortest-form ladder
-— runs on the executors (iter_packed_chunks*, one numpy lane-wise
+— runs on the executors (writers.export_chunks, one numpy lane-wise
 ladder pass per DISTINCT value — see _num_tokens_unique), and the
 driver only concatenates chunk payloads in partition order and wraps
 the stream at 80 columns with one numpy pass per chunk, so memory
@@ -34,13 +34,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from polars_readstat_spark.sources.por.b30 import _parse_base30
-from polars_readstat_spark.writers import column_kinds, ts_epoch_seconds
-
-
-from polars_readstat_spark.sources.por.reader import (
-    _POS_ASCII,
-    SPSS_SEC_SHIFT,
+from polars_readstat_spark.writers import (
+    SPSS_EPOCH,
+    column_kinds,
+    epoch_cast,
+    export_chunks,
 )
+from polars_readstat_spark.sources.por.reader import _POS_ASCII
+
+
 def _por_safe_table() -> bytes:
     """latin-1 byte → portable-charset byte; anything outside the
     portable charset becomes '?'. The format cannot carry other bytes:
@@ -754,24 +756,6 @@ def write_por(
         for f, k in zip(fields, kinds)
     ]
 
-    sel = []
-    for f, k in zip(fields, kinds):
-        c = F.col(f.name)
-        if k == "num":
-            sel.append(c.cast("double").alias(f.name))
-        elif k == "date":
-            sel.append(
-                (F.unix_date(c).cast("double") * 86400.0 + float(SPSS_SEC_SHIFT))
-                .alias(f.name)
-            )
-        elif k == "datetime":
-            sel.append((ts_epoch_seconds(c) + float(SPSS_SEC_SHIFT)).alias(f.name))
-        elif k == "time":
-            sel.append((c.cast("double") / 1e9).alias(f.name))
-        else:
-            sel.append(c.alias(f.name))
-    src = df.select(*sel)
-
     now = datetime.datetime.now()
     from polars_readstat_spark.sources.fs import fs_open_output
 
@@ -824,41 +808,19 @@ def write_por(
                 w.write("C")
                 w.string(label[:255])
         w.write("F")
-        from polars_readstat_spark.writers import (
-            iter_ordered_packed,
-            iter_packed_chunks,
-        )
-
         kinds_l = list(kinds)
-        # the shortest-token ladder dominates big exports: fan it
-        # across the cluster (wide protocol) once the pre-pass count
-        # says it's worth a shuffle + persist; small writes keep the
-        # cheap narrow path
-        # wide path: 8192-row chunks so the ladder fans across every
-        # core (65536-row chunks capped a 600k-row export at ~10-way);
         # the byte stream is chunk-boundary independent — tokens are
         # per-value and the 80-column wrap tracks a running position
-        por_mods = (
-            "polars_readstat_spark.writers.por",
-            "polars_readstat_spark.sources.por.b30",
-        )
-        # wide protocol: cast AFTER the repartition (guide §2.3) — the
-        # range-bounds sampling pass then re-executes only the bare
-        # scan + order tags, not the date/double casts (same fix as
-        # sav/xpt; `sel` resolves by name on the shuffled frame)
-        chunks = (
-            iter_ordered_packed(
-                df, lambda pdf: _pack_por_chunk(pdf, kinds_l), 8192,
-                modules=por_mods,
-                cast=lambda b: b.select(
-                    *sel, F.col("__prs_mid"), F.col("__prs_cid")
-                ),
-            )
-            if int(stats["__n"]) >= 100_000
-            else iter_packed_chunks(
-                src, lambda pdf: _pack_por_chunk(pdf, kinds_l), 65536,
-                modules=por_mods,
-            )
+        chunks = export_chunks(
+            df, "por", int(stats["__n"]),
+            lambda pdf: _pack_por_chunk(pdf, kinds_l),
+            cast=lambda b, keep: epoch_cast(
+                b, fields, kinds, SPSS_EPOCH, keep
+            ),
+            modules=(
+                "polars_readstat_spark.writers.por",
+                "polars_readstat_spark.sources.por.b30",
+            ),
         )
         pos = w.pos
         for payload, _n in chunks:

@@ -42,9 +42,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from polars_readstat_spark.writers import (
+    SAS_EPOCH,
     column_kinds,
+    epoch_cast,
+    export_chunks,
     str_cell_matrix,
-    ts_epoch_seconds,
 )
 from polars_readstat_spark.writers.tagged import (
     NO_TAG as _TAG_NONE,
@@ -73,13 +75,6 @@ SIG_COL_NAME = b"\xff\xff\xff\xff\xff\xff\xff\xff"
 SIG_COL_ATTRS = b"\xfc\xff\xff\xff\xff\xff\xff\xff"
 SIG_FMT_LABEL = b"\xfe\xfb\xff\xff\xff\xff\xff\xff"
 
-# SAS epoch 1960-01-01 relative to Unix epoch (shared with the xpt
-# writer, which targets the same epoch)
-from polars_readstat_spark.writers.xpt import (  # noqa: E402
-    SAS_DAY_SHIFT,
-    SAS_SEC_SHIFT,
-)
-
 
 def _sas_columns(df: DataFrame):
     fields = df.schema.fields
@@ -91,7 +86,7 @@ def _sas_columns(df: DataFrame):
                 "sas7bdat name limit"
             )
     kinds = column_kinds(fields)
-    aggs = [
+    aggs = [F.count(F.lit(1)).alias("__n")] + [
         F.max(F.octet_length(n)).alias(f"__w_{n}")
         for n, k in zip(names, kinds)
         if k == "str"
@@ -120,27 +115,6 @@ def _sas_widths(fields, kinds, stats, numeric_lengths=None) -> list[int]:
                 )
             widths.append(w)
     return widths
-
-
-def _sas_cast(df: DataFrame, fields, kinds, extra=()) -> DataFrame:
-    sel = []
-    for f, k in zip(fields, kinds):
-        c = F.col(f.name)
-        if k == "num":
-            sel.append(c.cast("double").alias(f.name))
-        elif k == "date":
-            sel.append(
-                (F.unix_date(c) + SAS_DAY_SHIFT).cast("double").alias(f.name)
-            )
-        elif k == "datetime":
-            sel.append(
-                (ts_epoch_seconds(c) + float(SAS_SEC_SHIFT)).alias(f.name)
-            )
-        elif k == "time":
-            sel.append((c.cast("double") / 1e9).alias(f.name))
-        else:
-            sel.append(c.alias(f.name))
-    return df.select(*sel, *extra)
 
 
 RLE_LITERAL = b"SASYZCRL"
@@ -920,7 +894,7 @@ def _build_header(dataset_name: str, page_length: int) -> bytes:
 def _pack_chunk_pdf(pdf, tag_slot, ncols, kinds, widths, row_length) -> bytes:
     """Pack one pandas chunk (data columns + trailing tag-indicator
     columns per tag_slot) into fixed-width row bytes. Executor-side,
-    shared by the single- and two-stage pack paths."""
+    in either arm of writers.export_chunks."""
     cols = [pdf.iloc[:, i] for i in range(pdf.shape[1])]
     tags = None
     if tag_slot:
@@ -939,8 +913,8 @@ def _encode_packed(packed: bytes, row_length: int, comp: str) -> bytes:
     numpy-parseable footer [lens i32×n][comps u8×n][<I n>][b"SLEN"]
     so the driver can assemble pages WITHOUT walking 5-byte headers
     per row — the per-row driver loop was ~2 s of a 5 s compressed
-    export (round 10). Pure — runs on executors in either the single-
-    or two-stage pack path; write_encoded falls back to the header
+    export (round 10). Pure — runs on executors in either arm of
+    writers.export_chunks; write_encoded falls back to the header
     walk when the footer is absent."""
     import io
     import struct as _st
@@ -1356,13 +1330,15 @@ def write_sas7bdat(
     tagged_missing: dict | None = None,
     numeric_lengths: dict | None = None,
 ) -> None:
-    """Write a Spark DataFrame as an uncompressed 64-bit LE sas7bdat.
+    """Write a Spark DataFrame as a 64-bit LE sas7bdat (``compress``
+    "rle" or "rdc" for SAS row compression).
 
     Same two-phase shape as the other single-file writers: one
-    pre-pass aggregation resolves string widths, then executors pack
-    (and encode) row chunks that the driver lays onto pages in
-    partition order. Use ``write_readstat_partitioned(df, dir,
-    ext="sas7bdat")`` for the distributed bulk-export path.
+    pre-pass aggregation resolves the row count and string widths,
+    then executors pack (and encode) row chunks that the driver lays
+    onto pages in input order (writers.export_chunks). Use
+    ``write_readstat_partitioned(df, dir, ext="sas7bdat")`` for the
+    distributed bulk-export path.
 
     numeric_lengths: SAS ``LENGTH var 3-8;`` truncated numeric
     storage — col → bytes (3..8). Keeps sign + exponent + the top
@@ -1396,92 +1372,43 @@ def write_sas7bdat(
                 f"numeric_lengths: {c!r} is tagged-missing — tags live in "
                 "the mantissa tail that truncation drops"
             )
-    stats = df.agg(*aggs).collect()[0].asDict() if aggs else {}
+    stats = df.agg(*aggs).collect()[0].asDict()
     widths = _sas_widths(fields, kinds, stats, numeric_lengths)
-    # indicator columns ride at the end of the stream, consumed at pack
-    src = _sas_cast(
-        df, fields, kinds,
-        extra=[F.col(c).cast("string").alias(f"__tag_{i}")
-               for i, c in enumerate(ind_names)],
-    )
     ncols = len(names)
     tag_slot = {names.index(v): ncols + ind_names.index(i)
                 for v, i in tagged_missing.items()}
-
-    def tags_for(cols):
-        if not tag_slot:
-            return None
-        from polars_readstat_spark.writers.tagged import parse_tag_offsets
-
-        return [
-            parse_tag_offsets(cols[tag_slot[ci]]) if ci in tag_slot else None
-            for ci in range(ncols)
-        ]
+    # indicator columns ride at the end of the stream, consumed at pack
+    tag_exprs = [
+        F.col(c).cast("string").alias(f"__tag_{i}")
+        for i, c in enumerate(ind_names)
+    ]
 
     # executors do the expensive work (row packing and, for
     # compressed files, per-row RLE/RDC encoding — rows are
     # independent, so this parallelizes perfectly); the driver only
-    # assembles pages from pre-encoded bytes in partition order. The
+    # assembles pages from pre-encoded bytes in input order. The
     # reference's sink is single-threaded end to end.
     rl = sum(widths)
     kinds_l, widths_l, comp = list(kinds), list(widths), compress or None
     tag_slot_l, ncols_l = dict(tag_slot), ncols
 
-    # the stage function and everything it references pickles BY VALUE
-    # (the executor may not have this package on sys.path — only the
-    # driver needs it); tagged.py has no package-internal imports and
-    # this module's executor-path helpers reference only module
-    # globals, so the closure is self-contained after registration
-    import sys as _sys
+    def pack_fn(pdf):
+        packed = _pack_chunk_pdf(
+            pdf, tag_slot_l, ncols_l, kinds_l, widths_l, rl
+        )
+        return _encode_packed(packed, rl, comp) if comp else packed
 
-    from pyspark import cloudpickle as _cp
-
-    for _mod in (
-        "polars_readstat_spark.writers.sas7bdat",
-        "polars_readstat_spark.writers.tagged",
-    ):
-        _cp.register_pickle_by_value(_sys.modules[_mod])
-
-    pack_pdf_f = _pack_chunk_pdf
-    encode_packed_f = _encode_packed
-
-    def pack_stage(batches):
-        import pyarrow as _pa
-
-        for b in batches:
-            start = 0
-            while start < b.num_rows:
-                piece = b.slice(start, 8192)
-                start += piece.num_rows
-                packed = pack_pdf_f(
-                    piece.to_pandas(), tag_slot_l, ncols_l,
-                    kinds_l, widths_l, rl,
-                )
-                if comp:
-                    packed = encode_packed_f(packed, rl, comp)
-                yield _pa.RecordBatch.from_arrays(
-                    [
-                        _pa.array([packed], type=_pa.binary()),
-                        _pa.array([piece.num_rows], type=_pa.int64()),
-                    ],
-                    names=["payload", "n"],
-                )
-
-    sc = df.sparkSession.sparkContext
-    cores = max(int(sc.defaultParallelism), 1)
-    n_src_parts = src.rdd.getNumPartitions()
-    # the encode dominates a compressed export; when the input has
-    # fewer partitions than cores (one 128 MB-split parquet scan →
-    # 3 tasks on a 32-core box), re-split the PACKED chunks across
-    # the cluster for the encode and let the driver restore order.
-    # Single-file export is the convenience path — the repartition
-    # moves chunk bytes once; bulk exports go through
-    # write_readstat_partitioned which never funnels through a driver.
-    # row packing (per-row Python on string cells) dominates plain
-    # exports the same way the RLE/RDC encode dominates compressed
-    # ones, and toLocalIterator runs a narrow pack stage one partition
-    # at a time — so any big-but-narrow input takes the wide protocol
-    two_stage = n_src_parts < cores
+    chunks = export_chunks(
+        df, "sas7bdat", int(stats["__n"]), pack_fn,
+        cast=lambda b, keep: epoch_cast(
+            b, fields, kinds, SAS_EPOCH, tag_exprs + keep
+        ),
+        modules=(
+            "polars_readstat_spark.writers.sas7bdat",
+            "polars_readstat_spark.writers.tagged",
+            "polars_readstat_spark.writers",
+        ),
+    )
 
     from polars_readstat_spark.sources.fs import fs_open_output
 
@@ -1490,51 +1417,9 @@ def write_sas7bdat(
             fh, fields, names, kinds, widths, dataset_name,
             variable_labels, page_length, compress,
         )
-        if two_stage:
-            # JVM-tagged single-crossing protocol (round 13; see
-            # writers.iter_ordered_packed): the shuffle carries the
-            # NARROW source types and the row-widening _sas_cast runs
-            # post-shuffle on every core, as do pack + RLE/RDC encode.
-            from polars_readstat_spark.writers import iter_ordered_packed
-
-            tag_exprs = [
-                F.col(c).cast("string").alias(f"__tag_{i}")
-                for i, c in enumerate(ind_names)
-            ]
-
-            def cast_after(shuffled):
-                return _sas_cast(
-                    shuffled, fields, kinds,
-                    extra=tag_exprs
-                    + [F.col("__prs_mid"), F.col("__prs_cid")],
-                )
-
-            def pack_encode_fn(pdf):
-                packed = pack_pdf_f(
-                    pdf, tag_slot_l, ncols_l, kinds_l, widths_l, rl
-                )
-                return (
-                    encode_packed_f(packed, rl, comp) if comp else packed
-                )
-
-            for payload, n in iter_ordered_packed(
-                df, pack_encode_fn, 4096,
-                modules=(
-                    "polars_readstat_spark.writers.sas7bdat",
-                    "polars_readstat_spark.writers.tagged",
-                    "polars_readstat_spark.writers",
-                ),
-                cast=cast_after,
-            ):
-                if comp:
-                    sink.write_encoded(payload, n)
-                else:
-                    sink.write_packed(payload, n)
-        else:
-            staged = src.mapInArrow(pack_stage, "payload binary, n bigint")
-            for row in staged.toLocalIterator(prefetchPartitions=True):
-                if comp:
-                    sink.write_encoded(row[0], row[1])
-                else:
-                    sink.write_packed(row[0], row[1])
+        for payload, n in chunks:
+            if comp:
+                sink.write_encoded(payload, n)
+            else:
+                sink.write_packed(payload, n)
         sink.close()

@@ -27,8 +27,7 @@ import tempfile
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-SAS_DAY_SHIFT = 3653
-SAS_SEC_SHIFT = 315_619_200
+from polars_readstat_spark.writers import SAS_DAY_SHIFT, SAS_SEC_SHIFT
 
 
 def _sas_name(name: str, seen: set, maxlen: int = 32) -> str:

@@ -40,13 +40,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from polars_readstat_spark.writers import (
+    SPSS_EPOCH,
     column_kinds,
+    epoch_cast,
+    export_chunks,
     str_cell_matrix,
-    ts_epoch_seconds,
 )
 
 SYSMIS_BITS = 0xFFEFFFFFFFFFFFFF
-SPSS_SEC_SHIFT = 12_219_379_200
 
 
 def _short_names(names: list[str]) -> list[bytes]:
@@ -155,15 +156,32 @@ def write_sav(
         compress=compress,
     )
 
-    # ---- data: stream partitions, pack vectorized --------------------
-    src = _sav_cast(df, fields, kinds)
-
+    # ---- data: pack on the executors, concatenate in input order ----
     el_numeric = np.concatenate(
         [
             np.zeros(ne, dtype=bool) if k == "str" else np.ones(1, dtype=bool)
             for k, ne in zip(kinds, el_per)
         ]
     ) if case_size else np.zeros(0, dtype=bool)
+
+    kinds_l, widths_l, el_l, cs = (
+        list(kinds), list(widths), list(el_per), case_size
+    )
+
+    def pack_fn(pdf):
+        return _pack_columns(
+            [pdf.iloc[:, i] for i in range(pdf.shape[1])],
+            kinds_l, widths_l, el_l, cs,
+        )
+
+    chunks = export_chunks(
+        df, "sav", int(nrows), pack_fn,
+        cast=lambda b, keep: epoch_cast(b, fields, kinds, SPSS_EPOCH, keep),
+        modules=(
+            "polars_readstat_spark.writers.sav",
+            "polars_readstat_spark.writers",
+        ),
+    )
 
     from polars_readstat_spark.sources.fs import fs_open_output
 
@@ -175,48 +193,6 @@ def write_sav(
             sink = _BytecodeSink(fh, el_numeric)
         else:
             sink = fh
-        # case packing runs on the executors; the driver concatenates
-        # (and, for zsav, zlib-frames) in partition order. Big
-        # exports take the all-cores JVM-tagged protocol — the narrow
-        # path's toLocalIterator runs ~1 input partition at a time,
-        # capping pack parallelism at the scan's partition count
-        # (guide §2.6 idle capacity; same policy as the por writer).
-        from polars_readstat_spark.writers import (
-            iter_ordered_packed,
-            iter_packed_chunks,
-        )
-
-        kinds_l, widths_l, el_l, cs = (
-            list(kinds), list(widths), list(el_per), case_size
-        )
-
-        def pack_fn(pdf):
-            return _pack_columns(
-                [pdf.iloc[:, i] for i in range(pdf.shape[1])],
-                kinds_l, widths_l, el_l, cs,
-            )
-
-        sav_mods = (
-            "polars_readstat_spark.writers.sav",
-            "polars_readstat_spark.writers",
-        )
-        # wide protocol: cast AFTER the repartition (guide §2.3 —
-        # project before the exchange). RangePartitioner's bounds
-        # sampling re-executes the exchange child once; with the cast
-        # post-shuffle that extra pass is the bare scan + order tags,
-        # not scan + date/double casts (measured: the pre-cast child
-        # cost the sav export ~0.4 s/run at sf0.1, r14)
-        chunks = (
-            iter_ordered_packed(
-                df, pack_fn, 8192, modules=sav_mods,
-                cast=lambda b: _sav_cast(
-                    b, fields, kinds,
-                    extra=[F.col("__prs_mid"), F.col("__prs_cid")],
-                ),
-            )
-            if int(nrows) >= 100_000
-            else iter_packed_chunks(src, pack_fn, 8192, modules=sav_mods)
-        )
         try:
             for payload, _n in chunks:
                 sink.write(payload)
@@ -322,33 +298,6 @@ def _sav_dictionary(
     # dictionary terminator
     out += struct.pack("<2i", 999, 0)
     return out
-
-
-def _sav_cast(df: DataFrame, fields, kinds, extra=()) -> DataFrame:
-    """Select casts once so every batch arrives pre-converted (dates →
-    seconds since 1582, etc.). ``extra`` appends pass-through columns
-    (the wide protocol's __prs_mid/__prs_cid order tags)."""
-    sel = []
-    for i, f in enumerate(fields):
-        c = F.col(f.name)
-        k = kinds[i]
-        if k == "num":
-            sel.append(c.cast("double").alias(f.name))
-        elif k == "date":
-            # days since 1970 → seconds since 1582
-            sel.append(
-                (F.unix_date(c).cast("double") * 86400.0 + float(SPSS_SEC_SHIFT))
-                .alias(f.name)
-            )
-        elif k == "datetime":
-            sel.append(
-                (ts_epoch_seconds(c) + float(SPSS_SEC_SHIFT)).alias(f.name)
-            )
-        elif k == "time":
-            sel.append((c.cast("double") / 1e9).alias(f.name))
-        else:
-            sel.append(c.alias(f.name))
-    return df.select(*sel, *extra)
 
 
 _SYSMIS_LE = np.frombuffer(struct.pack("<Q", SYSMIS_BITS), dtype=np.uint8)

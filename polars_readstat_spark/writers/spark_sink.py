@@ -53,20 +53,18 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from polars_readstat_spark.writers.sas7bdat import (
-    SAS_DAY_SHIFT,
-    SAS_SEC_SHIFT,
+from polars_readstat_spark.writers import (
+    SAS_EPOCH,
+    SPSS_EPOCH,
+    column_kinds,
 )
-from polars_readstat_spark.writers import column_kinds
-from polars_readstat_spark.writers.sav import SPSS_SEC_SHIFT
 
-# (date multiplier, date shift, datetime seconds shift) per format,
-# from the writers' canonical epoch constants
+# the epoch per format, as writers.epoch_cast applies it
 _EPOCH = {
-    "sas7bdat": (1.0, float(SAS_DAY_SHIFT), float(SAS_SEC_SHIFT)),
-    "xpt": (1.0, float(SAS_DAY_SHIFT), float(SAS_SEC_SHIFT)),
-    "sav": (86400.0, SPSS_SEC_SHIFT / 86400.0, float(SPSS_SEC_SHIFT)),
-    "zsav": (86400.0, SPSS_SEC_SHIFT / 86400.0, float(SPSS_SEC_SHIFT)),
+    "sas7bdat": SAS_EPOCH,
+    "xpt": SAS_EPOCH,
+    "sav": SPSS_EPOCH,
+    "zsav": SPSS_EPOCH,
 }
 _STR_LIMIT = {"sas7bdat": 32767, "sav": 255, "zsav": 255, "xpt": 200}
 
@@ -521,7 +519,7 @@ def convert_batches(
                 s = arr.to_pandas()
             elif k == "date":
                 days = pc.cast(arr, pa.int32()).cast(pa.float64()).to_pandas()
-                s = days * date_mul + (date_add * date_mul)
+                s = days * date_mul + date_add
             elif k == "datetime":
                 a = arr
                 if isinstance(a.type, pa.TimestampType) and a.type.tz:
@@ -578,15 +576,17 @@ def _bloom_max_bytes_opt(options) -> int | None:
         return None
 
 
-def stats_reader_keys(stats, fmt, names, shorts):
+def stats_reader_keys(stats, fmt, names, keys):
     """Re-key a ZoneMapStats.stats dict by what the READER will call
-    the columns — the manifest's keys must match the names the scan's
-    pushed filters carry or refutation lookups never match. Only xpt
-    renames (uppercase 8-char shorts); sav restores long names via
-    the subtype-13 record and dta/sas7bdat keep full names."""
-    if fmt != "xpt" or not shorts or not stats:
+    the columns (``keys``, parallel to ``names``) — the manifest's
+    keys must match the names the scan's pushed filters carry or
+    refutation lookups never match. Only xpt renames (uppercase 8-char
+    shorts, or a version-8 file's long names: xpt.reader_names); sav
+    restores long names via the subtype-13 record and dta/sas7bdat
+    keep full names."""
+    if fmt != "xpt" or not keys or not stats:
         return stats
-    ren = dict(zip(names, shorts))
+    ren = dict(zip(names, keys))
     return {ren.get(c, c): v for c, v in stats.items()}
 
 
@@ -728,8 +728,17 @@ def write_part(
         options, plan, **labels,
     )
 
+    keys = shorts
+    if fmt == "xpt":
+        from polars_readstat_spark.writers.xpt import reader_names
+
+        keys = reader_names(
+            fields, shorts, labels.get("variable_labels") or {},
+            labels.get("version", 5),
+        )
+
     def rekey(stats):
-        return stats_reader_keys(stats, fmt, names, shorts)
+        return stats_reader_keys(stats, fmt, names, keys)
 
     stripes = acc.stripes_payload()
     if stripes is not None:

@@ -6,9 +6,10 @@ descriptors (big-endian), fixed-width row-major records, IBM
 System/370 hexadecimal floats, blank-padded to 80-byte boundaries.
 
 Same two-phase Spark shape as the other writers: a pre-pass
-aggregation for string widths + row count, then a partition-ordered
-Arrow-chunk stream packed vectorized per batch. IEEE→IBM is
-exact (56-bit hex mantissa ⊇ 53-bit IEEE) and fully numpy-vectorized.
+aggregation for string widths + row count, then chunks packed
+vectorized on the executors (writers.export_chunks) that the driver
+concatenates in input order. IEEE→IBM is exact (56-bit hex mantissa
+⊇ 53-bit IEEE) and fully numpy-vectorized.
 
 Reference parity: src/sas/xpt_writer.rs (v5 limits: 8-char upper-case
 names, 40-char labels, numerics 8 bytes, '.' missing).
@@ -25,23 +26,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from polars_readstat_spark.writers import (
+    SAS_EPOCH,
     column_kinds,
+    epoch_cast,
+    export_chunks,
     str_cell_matrix,
-    ts_epoch_seconds,
 )
 from polars_readstat_spark.writers.tagged import (
     NO_TAG as _TAG_NONE,
     parse_tag_offsets as _parse_tag_offsets,
     xpt_tag_byte0 as _xpt_tag_byte0,
 )
-
-# SAS epoch 1960-01-01 relative to Unix epoch
-SAS_DAY_SHIFT = 3653
-SAS_SEC_SHIFT = 315_619_200
-
-
-def _pad80(b: bytes) -> bytes:
-    return b + b" " * ((-len(b)) % 80)
 
 
 def _hdr(tag: str, tail: str = "0" * 30) -> bytes:
@@ -163,11 +158,7 @@ def write_xpt(
     ]
 
     # packing (incl. IEEE→IBM) runs on the executors; the driver only
-    # concatenates fixed-width records in partition order. Big exports
-    # take the all-cores JVM-tagged protocol (see iter_ordered_packed;
-    # same ≥100k-row policy as the por/sav writers).
-    from polars_readstat_spark.writers import iter_packed_chunks
-
+    # concatenates fixed-width records in input order
     kinds_l, widths_l = list(kinds), list(widths)
     tag_slot_l, ncols_l, rw = dict(tag_slot), ncols, record_width
 
@@ -183,33 +174,19 @@ def write_xpt(
             ]
         return _pack_xpt(cols[:ncols_l], kinds_l, widths_l, rw, tags)
 
+    chunks = export_chunks(
+        df, "xpt", int(stats["__n"]), pack_fn,
+        cast=lambda b, keep: epoch_cast(
+            b, fields, kinds, SAS_EPOCH, tag_exprs + keep
+        ),
+        modules=(
+            "polars_readstat_spark.writers.xpt",
+            "polars_readstat_spark.writers.tagged",
+            "polars_readstat_spark.writers",
+        ),
+    )
     from polars_readstat_spark.sources.fs import fs_open_output
 
-    from polars_readstat_spark.writers import iter_ordered_packed
-
-    xpt_mods = (
-        "polars_readstat_spark.writers.xpt",
-        "polars_readstat_spark.writers.tagged",
-        "polars_readstat_spark.writers",
-    )
-    # wide protocol: cast AFTER the repartition (guide §2.3) — the
-    # range-bounds sampling pass then re-executes only the bare scan
-    # + order tags, not the date/double casts (same fix as sav)
-    chunks = (
-        iter_ordered_packed(
-            df, pack_fn, 8192, modules=xpt_mods,
-            cast=lambda b: _xpt_cast(
-                b, fields, kinds,
-                extra=tag_exprs
-                + [F.col("__prs_mid"), F.col("__prs_cid")],
-            ),
-        )
-        if int(stats["__n"]) >= 100_000
-        else iter_packed_chunks(
-            _xpt_cast(df, fields, kinds, extra=tag_exprs), pack_fn, 8192,
-            modules=xpt_mods,
-        )
-    )
     with fs_open_output(path) as fh:
         fh.write(bytes(out))
         total = 0
@@ -246,6 +223,38 @@ def _xpt_widths(fields, kinds, stats) -> list[int]:
         else:
             widths.append(8)
     return widths
+
+
+def _labelv8(f, variable_labels):
+    """(name, label) bytes of the field's LABELV8 entry in a version-8
+    file, or None when both fit the NAMESTR record (8-char name,
+    40-char label)."""
+    label = variable_labels.get(f.name) or f.metadata.get("label") or ""
+    if len(f.name) <= 8 and len(label) <= 40:
+        return None
+    return (
+        f.name.encode("ascii", "replace")[:32],
+        label.encode("ascii", "replace")[:256],
+    )
+
+
+def reader_names(fields, shorts, variable_labels, version) -> list[str]:
+    """The column names the xpt reader returns for a file written
+    with these arguments: the 8-char short names, except where a
+    version-8 file's LABELV8 entry hands back the long name, with the
+    reader's ``_1``, ``_2`` suffixes on duplicates."""
+    names = []
+    for f, short in zip(fields, shorts):
+        entry = _labelv8(f, variable_labels) if version == 8 else None
+        names.append(entry[0].decode("ascii") if entry else short)
+    seen: dict[str, int] = {}
+    for i, n in enumerate(names):
+        if n in seen:
+            seen[n] += 1
+            names[i] = f"{n}_{seen[n]}"
+        else:
+            seen[n] = 0
+    return names
 
 
 def _xpt_header(
@@ -305,12 +314,9 @@ def _xpt_header(
         # reader's LABELV8 parser is the inverse)
         entries = []
         for i, f in enumerate(fields):
-            label = (
-                variable_labels.get(f.name) or f.metadata.get("label") or ""
-            )
-            if len(f.name) > 8 or len(label) > 40:
-                nm = f.name.encode("ascii", "replace")[:32]
-                lb = label.encode("ascii", "replace")[:256]
+            entry = _labelv8(f, variable_labels)
+            if entry:
+                nm, lb = entry
                 entries.append(
                     struct.pack(">3h", i + 1, len(nm), len(lb)) + nm + lb
                 )
@@ -322,23 +328,6 @@ def _xpt_header(
     else:
         out += _hdr("OBS")
     return out
-
-
-def _xpt_cast(df: DataFrame, fields, kinds, extra=()) -> DataFrame:
-    sel = []
-    for f, k in zip(fields, kinds):
-        c = F.col(f.name)
-        if k == "num":
-            sel.append(c.cast("double").alias(f.name))
-        elif k == "date":
-            sel.append((F.unix_date(c) + SAS_DAY_SHIFT).cast("double").alias(f.name))
-        elif k == "datetime":
-            sel.append((ts_epoch_seconds(c) + float(SAS_SEC_SHIFT)).alias(f.name))
-        elif k == "time":
-            sel.append((c.cast("double") / 1e9).alias(f.name))
-        else:
-            sel.append(c.alias(f.name))
-    return df.select(*sel, *extra)
 
 
 def _pack_xpt(cols_data, kinds, widths, record_width, tags_data=None) -> bytes:

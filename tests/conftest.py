@@ -13,6 +13,24 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
+def needs_corpus(root):
+    """Skip mark for a test that reads the file corpus under ``root``:
+    it skips, naming the directory, only when the corpus is absent."""
+    return pytest.mark.skipif(
+        not os.path.isdir(root), reason=f"corpus not found: {root}"
+    )
+
+
+def corpus_params(paths, root, id_fn=os.path.basename):
+    """Parametrize values for a corpus file listing: one param per
+    file, or, when the listing is empty, one case marked
+    ``needs_corpus`` (pytest cannot build ids for an empty listing
+    through an ``ids`` function)."""
+    if paths:
+        return [pytest.param(p, id=id_fn(p)) for p in paths]
+    return [pytest.param(None, id="no-corpus", marks=needs_corpus(root))]
+
+
 @pytest.fixture(scope="session")
 def spark():
     from polars_readstat_spark.session import get_spark

@@ -17,6 +17,7 @@ import pandas as pd
 import pytest
 
 import polars_readstat_spark as prs
+from tests.conftest import corpus_params
 from polars_readstat_spark.sources.dta.decode import (
     STATA_EPOCH_DAYS,
     STATA_EPOCH_MS,
@@ -212,9 +213,7 @@ _PANDAS_DIVERGENT = {
 }
 
 
-@pytest.mark.parametrize(
-    "path", _supported_corpus(), ids=lambda p: os.path.basename(p)
-)
+@pytest.mark.parametrize("path", corpus_params(_supported_corpus(), CORPUS))
 def test_corpus_matches_pandas(path, spark):
     """Whole-corpus differential vs pandas (public pandas test files;
     versions 102-119 incl. big-endian)."""

@@ -490,6 +490,24 @@ def test_xpt_manifest_keys_match_reader_names(spark, tmp_path):
     ]
     assert sorted(rows) == [float(x) for x in range(3000, 4000)]
 
+    # version 8: LABELV8 hands the long name back, the short one stays
+    # for a name that fits
+    d8 = str(tmp_path / "bulk_xpt8_prune")
+    write_readstat_partitioned(
+        sdf.repartitionByRange(4, "row_identifier"), d8, ext="xpt",
+        version=8,
+    )
+    m = json.load(open(os.path.join(d8, "_prs_stats.json")))
+    for e in m["files"].values():
+        assert {"row_identifier", "V"} <= set(e["cols"])
+    _, all_parts, _ = _plan_parts(d8, [])
+    r, pruned, _ = _plan_parts(d8, [GreaterThan(("row_identifier",), 2999.0)])
+    assert len(pruned) < len(all_parts)
+    rows = [
+        v for p in pruned for b in r.read(p) for v in b.column(0).to_pylist()
+    ]
+    assert sorted(rows) == [float(x) for x in range(3000, 4000)]
+
 
 def test_numeric_extremes_poison_stats(spark, tmp_path):
     """Numeric values in the formats' missing-sentinel range read

@@ -4,8 +4,8 @@ The protocol replaces the two-crossing (pid, seq) chunk shuffle: rows
 are tagged in the JVM, shuffled by chunk id, packed in one Python
 crossing, and drained in exact input order. These tests pin the
 ordering contract and byte-equality between the wide and narrow
-writer paths, which every single-file writer now switches between on
-row count.
+protocols — the two arms writers.export_chunks switches between on
+row count for every single-file writer.
 """
 
 from __future__ import annotations

@@ -16,6 +16,7 @@ import pandas as pd
 import pytest
 
 import polars_readstat_spark as prs
+from tests.conftest import corpus_params, needs_corpus
 from polars_readstat_spark.sources.sas7bdat.decode import (
     SAS_EPOCH_DAYS,
     decode_rows,
@@ -72,7 +73,10 @@ def _to_stata_numeric(m, col, arr):
     return [np.nan if v is None else v for v in vals]
 
 
-@pytest.mark.parametrize("path", ALL_FILES, ids=lambda p: p.split("/data/")[-1])
+@pytest.mark.parametrize(
+    "path",
+    corpus_params(ALL_FILES, CORPUS, id_fn=lambda p: p.split("/data/")[-1]),
+)
 def test_corpus_matches_pandas(path):
     from pandas.io.sas.sas7bdat import SAS7BDATReader
 
@@ -111,6 +115,7 @@ def test_corpus_matches_pandas(path):
             assert ((a == bv) | both_nan).all(), f"{col.name}: values differ"
 
 
+@needs_corpus(CORPUS)
 def test_spark_read_sas(spark):
     p = os.path.join(CORPUS, "data_poe", "star.sas7bdat")
     sdf = prs.scan_readstat(spark, p)
@@ -122,6 +127,7 @@ def test_spark_read_sas(spark):
     assert np.allclose(got[c].values, ref[c].values, equal_nan=True)
 
 
+@needs_corpus(CORPUS)
 def test_spark_multi_partition_equals_single(spark):
     p = os.path.join(CORPUS, "data_poe", "star.sas7bdat")
     one = prs.scan_readstat(spark, p).toPandas()
@@ -137,6 +143,7 @@ def test_spark_multi_partition_equals_single(spark):
     assert (many["ri"].values == np.arange(len(one))).all()
 
 
+@needs_corpus(CORPUS)
 def test_spark_limit_offset_projection(spark):
     p = os.path.join(CORPUS, "data_poe", "star.sas7bdat")
     full = prs.scan_readstat(spark, p).toPandas()
@@ -151,6 +158,7 @@ def test_spark_limit_offset_projection(spark):
     assert ((a == b) | (pd.isna(a) & pd.isna(b))).all()
 
 
+@needs_corpus(CORPUS)
 def test_spark_compressed_files(spark):
     """RLE and RDC compressed reads through Spark (serial partition)."""
     hits = []
