@@ -1,6 +1,7 @@
 """Writers / sinks (SURVEY.md §2.7): Spark DataFrame → statistical
-file formats. Single-file formats with row-count headers ⇒ a pre-pass
-aggregation job (widths/counts/ranges), then executor-side packing
+file formats. Single-file formats with row-count headers ⇒ one
+pre-pass statistics job (``prepass``: counts, widths, ranges and the
+rows of every input partition), then executor-side packing
 whose chunks the driver only concatenates in input order — one
 driver, ``export_chunks``, with one threshold table choosing between
 its two arms (``iter_packed_chunks``, ``iter_ordered_packed``). The
@@ -59,6 +60,12 @@ def epoch_cast(df, fields, kinds, epoch, keep=()):
             c = c.cast("double") / 1e9
         sel.append(c.alias(f.name))
     return df.select(*sel, *keep)
+
+
+def str_columns(names, kinds) -> list[str]:
+    """The string columns of a column_kinds plan: the ``widths`` a
+    writer's pre-pass measures."""
+    return [n for n, k in zip(names, kinds) if k == "str"]
 
 
 # Spark types stored as plain doubles; void (an all-null column, e.g.
@@ -229,42 +236,75 @@ def iter_packed_chunks(df, pack_fn, max_rows: int = 8192, modules=()):
         yield row[0], row[1]
 
 
-def iter_ordered_packed(df, pack_fn, max_rows: int = 8192, modules=(), cast=None):
-    """Executor packing fanned across every core with JVM-side order
-    tags — one Python crossing (round 13; guide §4.1: control how
-    often data crosses the boundary).
+def _spark_extreme(vals, pick):
+    """``pick`` (min or max) of per-partition results in Spark's
+    ordering: nulls skipped, NaN above every number."""
+    vals = [v for v in vals if v is not None]
+    return pick(vals, key=lambda v: (v != v, v)) if vals else None
 
-    Rows are tagged in the JVM with a monotonically-increasing id and
-    a chunk id (``__prs_cid = __prs_mid div max_rows`` — contiguous,
-    in-order row groups, because the id is (partition << 33) + offset
-    so chunk ids sort exactly like the input row order), then
-    RANGE-repartitioned BY CHUNK ID across the cluster: whole chunks
-    travel together through a JVM-only shuffle, the data crosses into
-    Python exactly once in the pack stage, and — because range
-    partition index order IS cid order and each task emits its chunks
-    cid-ascending — the persisted pack output streams to the driver
-    already in exact input order via plain toLocalIterator (round 14;
-    VERDICT r13 next#5). The previous hash-partitioned drain paid a
-    second full exchange + sort of the PACKED PAYLOAD BYTES
-    (orderBy(cid) over the persisted chunks) to restore that order;
-    range partitioning moves the cost to one row-sampling pass of the
-    tagged input (RangePartitioner bounds), which at export scale is
-    far cheaper than re-shuffling every packed byte. A strictly-
-    increasing cid check at the drain turns any ordering violation
-    into a hard error instead of a corrupt file.
 
-    The previous protocol (two mapInArrow stages around the shuffle)
-    paid a second full Python crossing — slicing + Arrow-IPC
-    re-serializing every row on the narrow input partitions before
-    the shuffle could spread the work — measured 0.65 s of the
-    sas7bdat export pipeline at sf0.1 — plus a driver-side (pid, seq)
-    reassembly dict.
+def prepass(df, widths=(), ranges=()):
+    """The one statistics job of every single-file writer: row count
+    (``__n``), ``max(octet_length)`` per ``widths`` column
+    (``__w_<c>``), ``min``/``max`` per ``ranges`` column
+    (``__min_<c>``, ``__max_<c>``), and ``__counts``, the row count of
+    every input partition indexed by partition id (the routing table
+    of iter_ordered_packed). Spark aggregates per
+    ``spark_partition_id()``; the driver merges the one row per
+    partition (a second Spark aggregation level cost an extra shuffle
+    stage, ~0.2 s of CPU per export). An empty frame gives ``__n`` 0
+    and null stats."""
+    part = [F.count(F.lit(1)).alias("n")]
+    for i, c in enumerate(widths):
+        part.append(F.max(F.octet_length(c)).alias(f"w{i}"))
+    for i, c in enumerate(ranges):
+        part += [F.min(c).alias(f"lo{i}"), F.max(c).alias(f"hi{i}")]
+    rows = df.groupBy(F.spark_partition_id().alias("pid")).agg(*part).collect()
+    counts = [0] * (max((r.pid for r in rows), default=-1) + 1)
+    for r in rows:
+        counts[r.pid] = r.n
+    stats = {"__n": sum(counts), "__counts": counts}
+    for i, c in enumerate(widths):
+        stats[f"__w_{c}"] = _spark_extreme([r[f"w{i}"] for r in rows], max)
+    for i, c in enumerate(ranges):
+        stats[f"__min_{c}"] = _spark_extreme([r[f"lo{i}"] for r in rows], min)
+        stats[f"__max_{c}"] = _spark_extreme([r[f"hi{i}"] for r in rows], max)
+    return stats
+
+
+def iter_ordered_packed(
+    df, pack_fn, counts, max_rows: int = 8192, modules=(), cast=None
+):
+    """Executor packing fanned across every core, in one Python
+    crossing, drained in exact input order.
+
+    Each row gets, in the JVM, its monotonically-increasing id
+    ``__prs_mid`` (partition << 33 | offset) and a chunk id
+    ``__prs_cid = __prs_mid div max_rows``: chunks are contiguous,
+    never span two input partitions, and chunk ids sort exactly like
+    the input rows, whatever the plan's partition layout. ``counts``
+    (``prepass(df)["__counts"]``, the rows of every input partition)
+    only route: a chunk's routing key is ``base[partition]`` (the
+    prefix sum of the partitions' chunk counts) plus its index in the
+    partition, clamped to the partition's own key range, and
+    ``repartitionById`` sends key ``k`` of ``total`` to core ``k *
+    cores div total``. Whole chunks travel together through a JVM-only
+    shuffle, and since the key never decreases along input order,
+    partition index order is cid order even when the export's layout
+    differs from the pre-pass's (adaptive execution may coalesce an
+    upstream shuffle differently): wrong counts cost load balance, not
+    order. The shuffle map is the only read of ``df``. Each pack task
+    sorts its rows by ``__prs_mid``, splits on cid boundaries and emits
+    its chunks cid-ascending; the packed output is persisted (packing
+    runs on every core at once) and streams to the driver in partition
+    order. A strictly-increasing cid check and the staged chunk/row
+    totals turn an ordering or drain fault into a hard error.
 
     ``cast``, when given, is applied AFTER the repartition and must
     preserve the ``__prs_mid``/``__prs_cid`` columns: the shuffle
     then carries the narrow source types and the cast's row-widening
     (e.g. dates → display strings) runs on every core instead of on
-    the scan's partition count.
+    the input's partition count.
     """
     import sys
 
@@ -275,17 +315,39 @@ def iter_ordered_packed(df, pack_fn, max_rows: int = 8192, modules=(), cast=None
     for c in ("__prs_mid", "__prs_cid"):
         if c in df.columns:
             raise ValueError(f"iter_ordered_packed: column {c!r} is reserved")
+    max_rows = int(max_rows)
+    base, hi, total = [], [], 0
+    for n in counts:
+        base.append(total)
+        total += -(-n // max_rows)
+        hi.append(max(base[-1], total - 1))
     sc = df.sparkSession.sparkContext
     cores = max(int(sc.defaultParallelism), 1)
+    pid = "shiftright(__prs_mid, 33)"
+
+    def at(bound):
+        # per-partition bound; a partition the pre-pass never saw keys
+        # at total, past every counted chunk
+        arr = ", ".join(map(str, bound))
+        return f"coalesce(try_element_at(array({arr}), CAST({pid} AS INT) + 1), {total})"
+
+    key = (
+        f"least({at(base)} + __prs_cid - shiftleft({pid}, 33) div {max_rows}, "
+        f"{at(hi)})"
+    )
     tagged = df.withColumn(
         "__prs_mid", F.monotonically_increasing_id()
-    ).withColumn("__prs_cid", F.expr(f"__prs_mid div {int(max_rows)}"))
-    # one chunk-id range per core, measured: 4x over-partitioning to
-    # load-balance uneven chunk ids LOST to its own per-task Python-
-    # worker overhead in an interleaved A/B at sf0.1 (por 4.2 vs 4.4 s,
-    # rle 3.6 vs 3.9, zsav 2.9 vs 3.6) — the straggler tail it targets
-    # is smaller than 96 extra mapInArrow task spin-ups
-    body = tagged.repartitionByRange(cores, "__prs_cid")
+    ).withColumn("__prs_cid", F.expr(f"__prs_mid div {max_rows}"))
+    # one contiguous chunk-id range per core, measured: 4x over-
+    # partitioning to load-balance uneven chunk ids LOST to its own
+    # per-task Python-worker overhead in an interleaved A/B at sf0.1
+    # (por 4.2 vs 4.4 s, rle 3.6 vs 3.9, zsav 2.9 vs 3.6) — the
+    # straggler tail it targets is smaller than 96 extra mapInArrow
+    # task spin-ups
+    body = tagged.repartitionById(
+        cores,
+        F.expr(f"CAST(least(({key}) * {cores} div {max(total, 1)}, {cores - 1}) AS INT)"),
+    )
     if cast is not None:
         body = cast(body)
     names = [c for c in body.columns if c not in ("__prs_mid", "__prs_cid")]
@@ -302,9 +364,9 @@ def iter_ordered_packed(df, pack_fn, max_rows: int = 8192, modules=(), cast=None
             return
         # the shuffle reader merges map-output streams in arbitrary
         # order — restore row order inside the task, then split on
-        # chunk-id boundaries (range partitioning routes all rows of
-        # a chunk to this task, and this task's cid range precedes
-        # every later partition's)
+        # chunk-id boundaries (routing sends all rows of a chunk to
+        # this task, and this task's cid range precedes every later
+        # partition's)
         mid = tbl.column("__prs_mid").to_numpy()
         tbl = tbl.take(np.argsort(mid, kind="stable"))
         cid = tbl.column("__prs_cid").to_numpy()
@@ -333,17 +395,16 @@ def iter_ordered_packed(df, pack_fn, max_rows: int = 8192, modules=(), cast=None
         # materialize on every core AND capture chunk/row totals from
         # the same executed plan: the drained stream must match both,
         # which catches whole-trailing-partition loss in the local
-        # iterator (the failure mode the old protocol's terminator
-        # bookkeeping guarded against)
+        # iterator
         tot = staged.agg(
             F.count(F.lit(1)).alias("c"), F.sum("n").alias("r")
         ).collect()[0]
         exp_chunks, exp_rows = tot[0], tot[1] or 0
         got_chunks = got_rows = 0
         last_cid = None
-        # no orderBy: range partitioning already makes partition index
-        # order cid order, and each task emits cid-ascending — the
-        # monotonicity check below proves it on every drained stream
+        # no orderBy: partition index order is cid order, and each
+        # task emits cid-ascending — the monotonicity check below
+        # proves it on every drained stream
         for row in staged.toLocalIterator(prefetchPartitions=True):
             if last_cid is not None and row[0] <= last_cid:
                 raise RuntimeError(
@@ -369,11 +430,13 @@ def iter_ordered_packed(df, pack_fn, max_rows: int = 8192, modules=(), cast=None
 # packs in the input's own partitions (iter_packed_chunks); from it
 # upward it takes iter_ordered_packed, because toLocalIterator runs a
 # narrow pack stage about one input partition at a time, which caps
-# pack parallelism at one core whatever the partition count. dta's
-# pack is a cheap numpy recarray fill (~2 s per million rows on one
-# core), so the ordered arm's shuffle + persist costs more than it
-# saves until very large exports (measured at 600k rows: 2.0 s
-# narrow, 3.2 s ordered).
+# pack parallelism at one core whatever the partition count. Both arms
+# read the input twice: the pre-pass, then the pack stage (narrow) or
+# the shuffle map (ordered). dta's pack is a cheap numpy recarray fill
+# (~2 s per million rows on one core), so the ordered arm's shuffle +
+# persist cost more than they saved at 600k rows (2.0 s narrow, 3.2 s
+# ordered, measured when the ordered arm still ran a range-sampling
+# read of its input as well).
 # The por ladder and the sas7bdat RLE/RDC encode are the costliest
 # packs: their ordered arm uses smaller chunks so they fan across every
 # core (65536-row por chunks capped a 600k-row export at ~10-way).
@@ -386,24 +449,42 @@ EXPORT_THRESHOLDS = {
 }
 
 
-def export_chunks(df, fmt, n_rows, pack_fn, cast=None, modules=()):
+def export_chunks(df, fmt, stats, pack_fn, cast=None, modules=()):
     """The single-file export driver: yields ``(payload, n)`` packed
-    chunks of ``df`` in input order, whichever arm the row count picks
-    from EXPORT_THRESHOLDS. ``pack_fn`` and ``modules`` are as in
-    iter_packed_chunks. ``cast(frame, keep)`` returns ``frame`` with
-    the columns pack_fn reads, followed by the ``keep`` columns: the
-    narrow arm applies it before the pack stage with no ``keep``; the
-    ordered arm applies it after the range repartition with the order
-    tags as ``keep``, so the shuffle — and the range-bounds sampling
-    pass that re-runs its child — carry the narrow source types, and
-    the row-widening casts run on every core (casting before the
-    shuffle cost the sf0.1 sav export ~0.4 s per run)."""
+    chunks of ``df`` in input order. ``stats`` is ``prepass(df)``'s
+    result: its row count ``__n`` picks the arm from EXPORT_THRESHOLDS
+    and its per-partition ``__counts`` route the ordered arm.
+    ``pack_fn`` and ``modules`` are as in iter_packed_chunks.
+    ``cast(frame, keep)`` returns ``frame`` with the columns pack_fn
+    reads, followed by the ``keep`` columns: the narrow arm applies it
+    before the pack stage with no ``keep``; the ordered arm applies it
+    after the repartition with the order tags as ``keep``, so the
+    shuffle carries the narrow source types and the row-widening casts
+    run on every core (casting before the shuffle cost the sf0.1 sav
+    export ~0.4 s per run).
+
+    The header a writer built from the pre-pass must describe the
+    data, so once the stream ends its row total is compared with
+    ``__n`` and a mismatch (an upstream that is not deterministic, or
+    a partition that changed between the two reads) raises
+    RuntimeError instead of returning a file that contradicts itself."""
     wide_min_rows, narrow_rows, wide_rows = EXPORT_THRESHOLDS[fmt]
+    n_rows = stats["__n"]
     if n_rows >= wide_min_rows:
         keep = [F.col("__prs_mid"), F.col("__prs_cid")]
-        return iter_ordered_packed(
-            df, pack_fn, wide_rows, modules,
+        chunks = iter_ordered_packed(
+            df, pack_fn, stats["__counts"], wide_rows, modules,
             cast=None if cast is None else (lambda b: cast(b, keep)),
         )
-    src = df if cast is None else cast(df, [])
-    return iter_packed_chunks(src, pack_fn, narrow_rows, modules)
+    else:
+        src = df if cast is None else cast(df, [])
+        chunks = iter_packed_chunks(src, pack_fn, narrow_rows, modules)
+    got = 0
+    for payload, n in chunks:
+        got += n
+        yield payload, n
+    if got != n_rows:
+        raise RuntimeError(
+            f"export {fmt}: the data holds {got} rows but the pre-pass "
+            f"counted {n_rows} (is the input deterministic?)"
+        )

@@ -2,10 +2,10 @@
 
 Two Spark jobs, then a streaming assembly:
 
-1. **Pre-pass** (one aggregation job): per-column max UTF-8 byte
-   widths for strings, min/max for bigint downcast decisions, and the
-   row count — the Spark shape of the reference's sink pre-pass
-   (pybindings.rs:996-1047).
+1. **Pre-pass** (one aggregation job, `writers.prepass`): per-column
+   max UTF-8 byte widths for strings, min/max for bigint downcast
+   decisions, and the row count — the Spark shape of the reference's
+   sink pre-pass (pybindings.rs:996-1047).
 2. **Pack**: batches are packed vectorized (numpy structured array per
    batch) on the executors, and `write_dta` concatenates the packed
    chunks in input order (writers.export_chunks); with strL columns
@@ -31,11 +31,15 @@ import struct
 import numpy as np
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from polars_readstat_spark.sources.dta.decode import (
     STATA_EPOCH_DAYS,
     STATA_EPOCH_MS,
+)
+from polars_readstat_spark.writers import (
+    export_chunks,
+    iter_arrow_chunks,
+    prepass,
 )
 from polars_readstat_spark.writers.tagged import (
     NO_TAG as _TAG_NONE,
@@ -59,9 +63,9 @@ _STATA_EPOCH_US = -315_619_200_000_000
 
 
 def _plan_columns(df: DataFrame):
-    """→ list of (name, stata_kind, spark_conv) and the pre-pass aggs."""
-    plan = []
-    aggs = [F.count(F.lit(1)).alias("__n")]
+    """→ list of (name, stata_kind) and the pre-pass's widths and
+    ranges columns (see writers.prepass)."""
+    plan, widths, ranges = [], [], []
     for f in df.schema.fields:
         t = f.dataType.simpleString()
         if t in ("tinyint", "smallint", "int", "bigint"):
@@ -79,16 +83,14 @@ def _plan_columns(df: DataFrame):
                 "bigint": "long",
             }[t]
             plan.append((f.name, f"{floor}?"))
-            aggs.append(F.min(f.name).alias(f"__min_{f.name}"))
-            aggs.append(F.max(f.name).alias(f"__max_{f.name}"))
+            ranges.append(f.name)
         elif t == "float":
             # Stata float reserves bit patterns >= 0x7F000000
             # (~1.7014e38) for missing codes, but float32 values run to
             # 3.4e38 — the pre-pass promotes such columns to double
             # (exact for every float32)
             plan.append((f.name, "float?"))
-            aggs.append(F.min(f.name).alias(f"__min_{f.name}"))
-            aggs.append(F.max(f.name).alias(f"__max_{f.name}"))
+            ranges.append(f.name)
         elif t == "double":
             plan.append((f.name, "double"))
         elif t == "boolean":
@@ -99,12 +101,10 @@ def _plan_columns(df: DataFrame):
             plan.append((f.name, "datetime"))
         elif t == "string":
             plan.append((f.name, "str"))
-            aggs.append(
-                F.max(F.octet_length(f.name)).alias(f"__w_{f.name}")
-            )
+            widths.append(f.name)
         else:
             raise ValueError(f"write_dta: unsupported column type {t} ({f.name})")
-    return plan, aggs
+    return plan, widths, ranges
 
 
 def _finalize_cols(plan, stats) -> list[tuple]:
@@ -533,8 +533,8 @@ def write_dta(
 
     ind_names = list(dict.fromkeys(tagged_missing.values()))
     data_df = df.drop(*ind_names) if ind_names else df
-    plan, aggs = _plan_columns(data_df)
-    stats = df.agg(*aggs).collect()[0].asDict()
+    plan, widths, ranges = _plan_columns(data_df)
+    stats = prepass(df, widths, ranges)
     cols = _finalize_cols(plan, stats)
     kinds_by_name = {c[0]: c[1] for c in cols}
     for vcol, icol in tagged_missing.items():
@@ -554,15 +554,11 @@ def write_dta(
         # strL GSO records key on the GLOBAL row number, which only
         # the ordered driver stream knows — keep packing driver-side
         # (reference W2 pattern)
-        from polars_readstat_spark.writers import iter_arrow_chunks
-
         batches = iter_arrow_chunks(src, 65536)
         data, strls, n_rows = _pack_stream(cols, batches, tagged_missing)
     else:
         # fixed-width records with no cross-row state: pack on the
         # executors, concatenate on the driver in input order
-        from polars_readstat_spark.writers import export_chunks
-
         cols_l, tm = list(cols), dict(tagged_missing)
         rec_dtype = _rec_dtype(cols_l)
 
@@ -587,7 +583,7 @@ def write_dta(
         strls = bytearray()
         n_rows = 0
         for payload, n in export_chunks(
-            src, "dta", int(stats["__n"]), pack_fn,
+            src, "dta", stats, pack_fn,
             modules=(
                 "polars_readstat_spark.writers.dta",
                 "polars_readstat_spark.writers.tagged",

@@ -23,7 +23,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from polars_readstat_spark.writers import prepass, str_columns
 
 # keyword arguments per format, named as in the single-file writers
 # (every format also takes bloom_columns and bloom_max_bytes)
@@ -84,26 +85,23 @@ def write_readstat_partitioned(df: DataFrame, dir_path: str, ext: str = "dta", *
         **kwargs,
     }
     fmt, fields, names, shorts, kinds = plan_write(df.schema, options)
-    # the global pre-pass: one aggregation job fixes the plan every
-    # part shares
+    # the global pre-pass (the single-file writers' statistics job;
+    # its per-partition counts go unused) fixes the plan every part
+    # shares
     if fmt == "dta":
         from polars_readstat_spark.writers.dta import (
             _finalize_cols,
             _plan_columns,
         )
 
-        dta_plan, aggs = _plan_columns(df)
-        plan = _finalize_cols(dta_plan, df.agg(*aggs).collect()[0].asDict())
+        dta_plan, widths, ranges = _plan_columns(df)
+        plan = _finalize_cols(dta_plan, prepass(df, widths, ranges))
     else:
-        aggs = [
-            F.max(F.octet_length(n)).alias(n)
-            for n, k in zip(names, kinds)
-            if k == "str"
-        ]
-        stats = df.agg(*aggs).collect()[0].asDict() if aggs else {}
+        widths = str_columns(names, kinds)
+        stats = prepass(df, widths) if widths else {}
         plan = format_widths(
             fmt, fields, kinds,
-            {n: max(int(w or 0), 1) for n, w in stats.items()},
+            {n: max(int(stats[f"__w_{n}"] or 0), 1) for n in widths},
         )
     fs_makedirs(dir_path)
 

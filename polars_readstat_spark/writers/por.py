@@ -31,7 +31,6 @@ from __future__ import annotations
 import datetime
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from polars_readstat_spark.sources.por.b30 import _parse_base30
 from polars_readstat_spark.writers import (
@@ -39,6 +38,8 @@ from polars_readstat_spark.writers import (
     column_kinds,
     epoch_cast,
     export_chunks,
+    prepass,
+    str_columns,
 )
 from polars_readstat_spark.sources.por.reader import _POS_ASCII
 
@@ -745,12 +746,7 @@ def write_por(
     por_names = _por_names(names)
 
     kinds = column_kinds(fields)
-    aggs = [F.count(F.lit(1)).alias("__n")] + [
-        F.max(F.octet_length(n)).alias(f"__w_{n}")
-        for n, k in zip(names, kinds)
-        if k == "str"
-    ]
-    stats = df.agg(*aggs).collect()[0].asDict()
+    stats = prepass(df, str_columns(names, kinds))
     widths = [
         max(int(stats.get(f"__w_{f.name}") or 1), 1) if k == "str" else 0
         for f, k in zip(fields, kinds)
@@ -812,7 +808,7 @@ def write_por(
         # the byte stream is chunk-boundary independent — tokens are
         # per-value and the 80-column wrap tracks a running position
         chunks = export_chunks(
-            df, "por", int(stats["__n"]),
+            df, "por", stats,
             lambda pdf: _pack_por_chunk(pdf, kinds_l),
             cast=lambda b, keep: epoch_cast(
                 b, fields, kinds, SPSS_EPOCH, keep

@@ -46,7 +46,9 @@ from polars_readstat_spark.writers import (
     column_kinds,
     epoch_cast,
     export_chunks,
+    prepass,
     str_cell_matrix,
+    str_columns,
 )
 from polars_readstat_spark.writers.tagged import (
     NO_TAG as _TAG_NONE,
@@ -85,13 +87,7 @@ def _sas_columns(df: DataFrame):
                 f"write_sas7bdat: column name {n!r} exceeds the 32-byte "
                 "sas7bdat name limit"
             )
-    kinds = column_kinds(fields)
-    aggs = [F.count(F.lit(1)).alias("__n")] + [
-        F.max(F.octet_length(n)).alias(f"__w_{n}")
-        for n, k in zip(names, kinds)
-        if k == "str"
-    ]
-    return fields, names, kinds, aggs
+    return fields, names, column_kinds(fields)
 
 
 def _sas_widths(fields, kinds, stats, numeric_lengths=None) -> list[int]:
@@ -1351,7 +1347,7 @@ def write_sas7bdat(
     tagged_missing = dict(tagged_missing or {})
     ind_names = list(dict.fromkeys(tagged_missing.values()))
     data_df = df.drop(*ind_names) if ind_names else df
-    fields, names, kinds, aggs = _sas_columns(data_df)
+    fields, names, kinds = _sas_columns(data_df)
     for vcol, icol in tagged_missing.items():
         if vcol not in names or kinds[names.index(vcol)] == "str":
             raise ValueError(
@@ -1372,7 +1368,7 @@ def write_sas7bdat(
                 f"numeric_lengths: {c!r} is tagged-missing — tags live in "
                 "the mantissa tail that truncation drops"
             )
-    stats = df.agg(*aggs).collect()[0].asDict()
+    stats = prepass(df, str_columns(names, kinds))
     widths = _sas_widths(fields, kinds, stats, numeric_lengths)
     ncols = len(names)
     tag_slot = {names.index(v): ncols + ind_names.index(i)
@@ -1399,7 +1395,7 @@ def write_sas7bdat(
         return _encode_packed(packed, rl, comp) if comp else packed
 
     chunks = export_chunks(
-        df, "sas7bdat", int(stats["__n"]), pack_fn,
+        df, "sas7bdat", stats, pack_fn,
         cast=lambda b, keep: epoch_cast(
             b, fields, kinds, SAS_EPOCH, tag_exprs + keep
         ),

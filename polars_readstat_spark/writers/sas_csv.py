@@ -27,7 +27,7 @@ import tempfile
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from polars_readstat_spark.writers import SAS_DAY_SHIFT, SAS_SEC_SHIFT
+from polars_readstat_spark.writers import SAS_DAY_SHIFT, SAS_SEC_SHIFT, prepass
 
 
 def _sas_name(name: str, seen: set, maxlen: int = 32) -> str:
@@ -75,13 +75,13 @@ def write_sas_csv_import(
     # plan + conversions
     kinds, lengths, formats = [], {}, {}
     sel = []
-    aggs = []
+    widths = []
     for f, sn in zip(fields, sas_names):
         t = f.dataType.simpleString()
         c = F.col(f.name)
         if t == "string":
             kinds.append("str")
-            aggs.append(F.max(F.octet_length(f.name)).alias(f"__w_{f.name}"))
+            widths.append(f.name)
             sel.append(c.alias(sn))
         elif t == "boolean":
             kinds.append("num")
@@ -117,8 +117,8 @@ def write_sas_csv_import(
             sel.append(c.alias(sn))
 
     str_widths = {}
-    if aggs:
-        stats = df.agg(*aggs).collect()[0].asDict()
+    if widths:
+        stats = prepass(df, widths)
         for f, sn in zip(fields, sas_names):
             if f.dataType.simpleString() == "string":
                 str_widths[sn] = max(int(stats.get(f"__w_{f.name}") or 1), 1)

@@ -37,14 +37,15 @@ import struct
 import numpy as np
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from polars_readstat_spark.writers import (
     SPSS_EPOCH,
     column_kinds,
     epoch_cast,
     export_chunks,
+    prepass,
     str_cell_matrix,
+    str_columns,
 )
 
 SYSMIS_BITS = 0xFFEFFFFFFFFFFFFF
@@ -77,18 +78,11 @@ def _fmt_int(fmt_type: int, width: int, dec: int) -> int:
 
 
 def _sav_columns(df: DataFrame):
-    """→ (fields, names, shorts, kinds, pre-pass aggs).
+    """→ (fields, names, shorts, kinds).
     kind: num | date | datetime | time | str."""
     fields = df.schema.fields
     names = [f.name for f in fields]
-    shorts = _short_names(names)
-    kinds = column_kinds(fields)
-    aggs = [F.count(F.lit(1)).alias("__n")] + [
-        F.max(F.octet_length(n)).alias(f"__w_{n}")
-        for n, k in zip(names, kinds)
-        if k == "str"
-    ]
-    return fields, names, shorts, kinds, aggs
+    return fields, names, _short_names(names), column_kinds(fields)
 
 
 def _sav_widths(fields, kinds, stats) -> list[int]:
@@ -142,8 +136,8 @@ def write_sav(
         compress = False  # zsav's zlib layer subsumes it; stream
         # stays all-literal so our reader's parallel plan applies
 
-    fields, names, shorts, kinds, aggs = _sav_columns(df)
-    stats = df.agg(*aggs).collect()[0].asDict()
+    fields, names, shorts, kinds = _sav_columns(df)
+    stats = prepass(df, str_columns(names, kinds))
     nrows = stats["__n"]
     widths = _sav_widths(fields, kinds, stats)
 
@@ -175,7 +169,7 @@ def write_sav(
         )
 
     chunks = export_chunks(
-        df, "sav", int(nrows), pack_fn,
+        df, "sav", stats, pack_fn,
         cast=lambda b, keep: epoch_cast(b, fields, kinds, SPSS_EPOCH, keep),
         modules=(
             "polars_readstat_spark.writers.sav",

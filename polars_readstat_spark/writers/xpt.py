@@ -30,7 +30,9 @@ from polars_readstat_spark.writers import (
     column_kinds,
     epoch_cast,
     export_chunks,
+    prepass,
     str_cell_matrix,
+    str_columns,
 )
 from polars_readstat_spark.writers.tagged import (
     NO_TAG as _TAG_NONE,
@@ -132,7 +134,7 @@ def write_xpt(
     tagged_missing = dict(tagged_missing or {})
     ind_names = list(dict.fromkeys(tagged_missing.values()))
     data_df = df.drop(*ind_names) if ind_names else df
-    fields, names, shorts, kinds, aggs = _xpt_columns(data_df)
+    fields, names, shorts, kinds = _xpt_columns(data_df)
     for vcol, icol in tagged_missing.items():
         if vcol not in names or kinds[names.index(vcol)] == "str":
             raise ValueError(
@@ -142,7 +144,7 @@ def write_xpt(
             raise ValueError(
                 f"tagged_missing: indicator column {icol!r} not in DataFrame"
             )
-    stats = df.agg(*aggs).collect()[0].asDict()
+    stats = prepass(df, str_columns(names, kinds))
     widths = _xpt_widths(fields, kinds, stats)
     record_width = sum(widths)
     ncols = len(names)
@@ -175,7 +177,7 @@ def write_xpt(
         return _pack_xpt(cols[:ncols_l], kinds_l, widths_l, rw, tags)
 
     chunks = export_chunks(
-        df, "xpt", int(stats["__n"]), pack_fn,
+        df, "xpt", stats, pack_fn,
         cast=lambda b, keep: epoch_cast(
             b, fields, kinds, SAS_EPOCH, tag_exprs + keep
         ),
@@ -199,14 +201,7 @@ def write_xpt(
 def _xpt_columns(df: DataFrame):
     fields = df.schema.fields
     names = [f.name for f in fields]
-    shorts = _short_names(names)
-    kinds = column_kinds(fields)
-    aggs = [F.count(F.lit(1)).alias("__n")] + [
-        F.max(F.octet_length(n)).alias(f"__w_{n}")
-        for n, k in zip(names, kinds)
-        if k == "str"
-    ]
-    return fields, names, shorts, kinds, aggs
+    return fields, names, _short_names(names), column_kinds(fields)
 
 
 def _xpt_widths(fields, kinds, stats) -> list[int]:

@@ -1,11 +1,11 @@
-"""iter_ordered_packed (round-13 JVM-tagged wide packing protocol).
+"""iter_ordered_packed (JVM-tagged wide packing protocol).
 
-The protocol replaces the two-crossing (pid, seq) chunk shuffle: rows
-are tagged in the JVM, shuffled by chunk id, packed in one Python
-crossing, and drained in exact input order. These tests pin the
-ordering contract and byte-equality between the wide and narrow
-protocols — the two arms writers.export_chunks switches between on
-row count for every single-file writer.
+Rows are tagged in the JVM with a global chunk id derived from the
+pre-pass's per-partition row counts, routed to cores by chunk id,
+packed in one Python crossing, and drained in exact input order.
+These tests pin the ordering contract and byte-equality between the
+wide and narrow protocols — the two arms writers.export_chunks
+switches between on row count for every single-file writer.
 """
 
 from __future__ import annotations
@@ -17,7 +17,12 @@ from pyspark.sql import functions as F
 from polars_readstat_spark.writers import (
     iter_ordered_packed,
     iter_packed_chunks,
+    prepass,
 )
+
+
+def _counts(df):
+    return prepass(df)["__counts"]
 
 
 def _ids_pack(pdf) -> bytes:
@@ -28,14 +33,16 @@ def _ids_pack(pdf) -> bytes:
 def test_ordered_packed_exact_input_order(spark):
     # 10 input partitions, rows strictly increasing across them — the
     # drained payload stream must reproduce the exact global order
-    # despite the hash shuffle by chunk id
+    # after the shuffle by chunk id
     df = (
         spark.range(0, 25_000, 1, 10)
         .select(F.col("id"), (F.col("id") % 7).alias("v"))
     )
     got = b"".join(
         payload
-        for payload, _n in iter_ordered_packed(df, _ids_pack, max_rows=512)
+        for payload, _n in iter_ordered_packed(
+            df, _ids_pack, _counts(df), max_rows=512
+        )
     )
     ids = [int(x) for chunk in got.split(b";") if chunk for x in chunk.split(b",")]
     assert ids == list(range(25_000))
@@ -49,7 +56,7 @@ def test_ordered_packed_matches_narrow_protocol(spark):
     def pack(pdf):
         return ("|".join(f"{i}:{s}" for i, s in zip(pdf["id"], pdf["s"])) + "\n").encode()
 
-    wide = b"".join(p for p, _ in iter_ordered_packed(df, pack, max_rows=1000))
+    wide = b"".join(p for p, _ in iter_ordered_packed(df, pack, _counts(df), max_rows=1000))
     narrow = b"".join(p for p, _ in iter_packed_chunks(df, pack, 1000))
     # chunk boundaries differ; the concatenated per-row stream must not
     assert wide.replace(b"\n", b"|") == narrow.replace(b"\n", b"|")
@@ -60,7 +67,7 @@ def test_ordered_packed_row_totals_and_chunks(spark):
     rows = 0
     chunks = 0
     for payload, n in iter_ordered_packed(
-        df.select(F.col("id")), _ids_pack, max_rows=1024
+        df.select(F.col("id")), _ids_pack, _counts(df), max_rows=1024
     ):
         assert payload
         rows += n
@@ -72,13 +79,13 @@ def test_ordered_packed_row_totals_and_chunks(spark):
 
 def test_ordered_packed_empty_frame(spark):
     df = spark.range(0, 0).select(F.col("id"))
-    assert list(iter_ordered_packed(df, _ids_pack, max_rows=64)) == []
+    assert list(iter_ordered_packed(df, _ids_pack, _counts(df), max_rows=64)) == []
 
 
 def test_ordered_packed_reserved_columns(spark):
     df = spark.range(3).select(F.col("id").alias("__prs_mid"))
     with pytest.raises(ValueError, match="reserved"):
-        list(iter_ordered_packed(df, _ids_pack))
+        list(iter_ordered_packed(df, _ids_pack, _counts(df)))
 
 
 def test_ordered_packed_cast_after_shuffle(spark):
@@ -93,7 +100,28 @@ def test_ordered_packed_cast_after_shuffle(spark):
         )
 
     got = b"".join(
-        p for p, _ in iter_ordered_packed(df, _ids_pack, max_rows=600, cast=cast)
+        p for p, _ in iter_ordered_packed(
+            df, _ids_pack, _counts(df), max_rows=600, cast=cast
+        )
     )
     ids = [int(x) for chunk in got.split(b";") if chunk for x in chunk.split(b",")]
     assert ids == [2 * i for i in range(4_000)]
+
+
+@pytest.mark.parametrize(
+    "counts",
+    [[0, 128, 256, 0], [256, 128], [0, 0, 0, 0, 384], [384], []],
+    ids=["other_layout", "fewer_partitions", "later_partition", "one_partition", "none"],
+)
+def test_ordered_packed_counts_of_another_layout(spark, counts):
+    # the export can lay df out differently from the pre-pass (adaptive
+    # execution may coalesce an upstream shuffle another way); counts
+    # that do not describe df's partitions cost load balance, not order.
+    # df's layout is [128, 128, 128, 0] rows: two 64-row chunks in each
+    # of the first three partitions
+    df = spark.range(0, 512, 1, 4).where("id < 384")
+    got = b"".join(
+        p for p, _ in iter_ordered_packed(df, _ids_pack, counts, max_rows=64)
+    )
+    ids = [int(x) for chunk in got.split(b";") if chunk for x in chunk.split(b",")]
+    assert ids == list(range(384))
